@@ -1,22 +1,26 @@
-"""Cell-index build — one declarative job per lake (SURVEY.md §3.A).
+"""Cell-index build — one pass over the lake (SURVEY.md §3.A).
 
 The reference builds its inverted index with a per-file Python loop that
 stringifies, tokenizes, hashes and COPYs row-by-row
 (``maco/data_handler.py:258-420``).  Here the whole build is a Spark
-pipeline: stringify + tokenize as native expressions, wide→long unpivot via
-``stack``, XASH via one Arrow-batched pandas UDF, and the per-row super key
-as a ``bit_or`` aggregation — no driver-side iteration, scales with
-executors.
+pipeline that reads each lake table once: per column one fused
+tokenize+XASH Arrow UDF over the JVM string cast, the per-row super key
+as a native OR-fold over the wide format, and a ``stack`` unpivot to one
+row per cell — no shuffle, no driver-side iteration.  That denormalized
+keyed frame is the only lake-sized computation; every index member is a
+projection or a small aggregate of it (:func:`index_members`).
 """
 
 from __future__ import annotations
+
+from itertools import accumulate
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from datalake_indexes_spark.functions.text import tokenize_col
-from datalake_indexes_spark.functions.xash import xash_pandas_udf
 from datalake_indexes_spark.index.lake_index import LakeIndex
+from datalake_indexes_spark.session import local_frame
 from datalake_indexes_spark.sources.catalog import LakeTableSpec
 
 
@@ -86,13 +90,11 @@ def with_global_row_number(df: DataFrame, order_by: list[str], out_col: str = "r
     counts = (
         ranged.groupBy("__pid").count().orderBy("__pid").collect()
     )
-    offsets = {}
-    acc = 0
-    for r in counts:
-        offsets[r["__pid"]] = acc
-        acc += r["count"]
-    offset_df = df.sparkSession.createDataFrame(
-        [(pid, off) for pid, off in offsets.items()], "__pid int, __offset long"
+    starts = accumulate([r["count"] for r in counts], initial=0)
+    offset_df = local_frame(
+        df.sparkSession,
+        [(r["__pid"], start) for r, start in zip(counts, starts)],
+        "__pid int, __offset long",
     )
     return (
         ranged.join(F.broadcast(offset_df), "__pid")
@@ -109,7 +111,8 @@ def unpivot_to_cells(
     Tokenization runs as native expressions *before* the stack so every
     column stays inside whole-stage codegen.
 
-    With ``hash_udf`` the output additionally carries the per-ROW super
+    With ``hash_udf`` (a hash of the JVM tokens) or ``tok_hash_udf``
+    (fused tokenize+hash) the output additionally carries the per-ROW super
     key (``super_key_hi``/``super_key_lo``) computed entirely inside the
     map stage: every cell of a physical row is produced by the same scan
     task (the stack is row-local), so the OR-fold over the row's cell
@@ -127,74 +130,44 @@ def unpivot_to_cells(
     else:
         wide = with_global_row_number(cols, list(spec.order_by))
     n = len(spec.cols)
+    hashes = []
     if tok_hash_udf is not None:
         # fused tokenize+hash (guide §4.2): one Arrow crossing per column;
         # tokenization and hashing run only over each batch's unique raw
         # values inside the UDF.  The JVM keeps the cast (its string
         # formatting is part of the token contract).
+        hashes = [f"__s_{i}" for i in range(n)]
         wide = wide.select(
             "row_id",
-            *[
-                tok_hash_udf(F.col(c).cast("string")).alias(f"__s_{i}")
-                for i, c in enumerate(spec.cols)
-            ],
+            *[tok_hash_udf(F.col(c).cast("string")).alias(h) for c, h in zip(spec.cols, hashes)],
         )
-        hi, lo = F.col("__s_0.hi"), F.col("__s_0.lo")
-        for i in range(1, n):
-            hi = hi.bitwiseOR(F.col(f"__s_{i}.hi"))
-            lo = lo.bitwiseOR(F.col(f"__s_{i}.lo"))
-        stack_args = ", ".join(f"{i}, __s_{i}.tok" for i in range(n))
-        return (
-            wide.withColumn("super_key_hi", hi)
-            .withColumn("super_key_lo", lo)
-            .selectExpr(
-                "row_id",
-                "super_key_hi",
-                "super_key_lo",
-                f"stack({n}, {stack_args}) as (col_id, tokenized)",
-            )
-            .withColumn("table_id", F.lit(spec.table_id))
-            .select(
-                "table_id", "col_id", "row_id", "tokenized",
-                "super_key_hi", "super_key_lo",
-            )
+        toks = [f"{h}.tok" for h in hashes]
+    else:
+        toks = [f"__tok_{i}" for i in range(n)]
+        wide = wide.select(
+            "row_id", *[tokenize_col(F.col(c)).alias(t) for c, t in zip(spec.cols, toks)]
         )
-    tokenized_cols = [
-        tokenize_col(F.col(c)).alias(f"__tok_{i}") for i, c in enumerate(spec.cols)
-    ]
-    wide = wide.select("row_id", *tokenized_cols)
-    stack_args = ", ".join(f"{i}, __tok_{i}" for i in range(n))
-    if hash_udf is not None:
-        hashed = wide.select(
-            "row_id",
-            *[F.col(f"__tok_{i}") for i in range(n)],
-            *[hash_udf(F.col(f"__tok_{i}")).alias(f"__h_{i}") for i in range(n)],
-        )
-        hi, lo = F.col("__h_0.hi"), F.col("__h_0.lo")
-        for i in range(1, n):
-            hi = hi.bitwiseOR(F.col(f"__h_{i}.hi"))
-            lo = lo.bitwiseOR(F.col(f"__h_{i}.lo"))
-        hashed = hashed.withColumn("super_key_hi", hi).withColumn("super_key_lo", lo)
-        return (
-            hashed.selectExpr(
-                "row_id",
-                "super_key_hi",
-                "super_key_lo",
-                f"stack({n}, {stack_args}) as (col_id, tokenized)",
+        if hash_udf is not None:
+            hashes = [f"__h_{i}" for i in range(n)]
+            wide = wide.select(
+                "row_id", *toks,
+                *[hash_udf(F.col(t)).alias(h) for t, h in zip(toks, hashes)],
             )
-            .withColumn("table_id", F.lit(spec.table_id))
-            .select(
-                "table_id", "col_id", "row_id", "tokenized",
-                "super_key_hi", "super_key_lo",
-            )
-        )
+    keys = []
+    if hashes:
+        hi, lo = F.col(f"{hashes[0]}.hi"), F.col(f"{hashes[0]}.lo")
+        for h in hashes[1:]:
+            hi = hi.bitwiseOR(F.col(f"{h}.hi"))
+            lo = lo.bitwiseOR(F.col(f"{h}.lo"))
+        wide = wide.withColumn("super_key_hi", hi).withColumn("super_key_lo", lo)
+        keys = ["super_key_hi", "super_key_lo"]
+    stack_args = ", ".join(f"{i}, {t}" for i, t in enumerate(toks))
     return (
         wide.selectExpr(
-            "row_id",
-            f"stack({n}, {stack_args}) as (col_id, tokenized)",
+            "row_id", *keys, f"stack({n}, {stack_args}) as (col_id, tokenized)"
         )
         .withColumn("table_id", F.lit(spec.table_id))
-        .select("table_id", "col_id", "row_id", "tokenized")
+        .select("table_id", "col_id", "row_id", "tokenized", *keys)
     )
 
 
@@ -206,10 +179,15 @@ def build_keyed_cells(
     rotation: bool = True,
     number_of_ones: int = 5,
     hash_function=None,
+    with_super_keys: bool = True,
 ) -> DataFrame:
     """The denormalized keyed cell view (cells + per-row super key) built
     SHUFFLE-FREE: per-table wide-format hash + native OR-fold inside the
     scan stage (see :func:`unpivot_to_cells`), unioned across the lake.
+    XASH runs fused with tokenization (one Arrow crossing per column);
+    a custom ``hash_function`` hashes the JVM-tokenized cells instead.
+    With ``with_super_keys=False`` it is the plain JVM-tokenized cell
+    frame: no key columns and no Python UDF.
 
     Output partitioning is the scan partitioning — callers that want the
     (table_id, row_id)-clustered layout (exchange-free row joins against
@@ -219,11 +197,11 @@ def build_keyed_cells(
     """
     hash_udf = None
     tok_hash_udf = None
-    if hash_function is not None:
+    if with_super_keys and hash_function is not None:
         from datalake_indexes_spark.functions.hashes import hash_pandas_udf
 
         hash_udf = hash_pandas_udf(hash_function)
-    else:
+    elif with_super_keys:
         from datalake_indexes_spark.functions.xash import tokenize_xash_pandas_udf
 
         tok_hash_udf = tokenize_xash_pandas_udf(
@@ -231,9 +209,11 @@ def build_keyed_cells(
         )
     active = [(n, s) for n, s in specs.items() if n in tables]
     if not active:
-        raise ValueError("build_keyed_cells: no tables to index (empty lake)")
+        raise ValueError("build_index: no tables to index (empty lake)")
     from concurrent.futures import ThreadPoolExecutor
 
+    # per-table prep runs in threads: row numbering by an order key runs
+    # a small eager job per table, which Spark then schedules concurrently
     with ThreadPoolExecutor(max_workers=min(len(active), 8) or 1) as pool:
         parts = list(
             pool.map(
@@ -253,43 +233,73 @@ def build_keyed_cells(
 def lake_headers(spark: SparkSession, tables: dict[str, DataFrame],
                  specs: dict[str, LakeTableSpec]) -> DataFrame:
     """(table_id, col_id, header, header_tokenized) for the active lake —
-    driver-side metadata, one tiny createDataFrame."""
-    header_rows = []
-    for name, spec in specs.items():
-        if name not in tables:
-            continue
-        for col_id, col in enumerate(spec.cols):
-            header_rows.append((spec.table_id, col_id, col))
-    return spark.createDataFrame(
-        header_rows, "table_id int, col_id int, header string"
+    driver-side metadata in one tiny JVM-local frame, tokenized by the
+    JVM tokenizer."""
+    header_rows = [
+        (spec.table_id, col_id, col)
+        for name, spec in specs.items()
+        if name in tables
+        for col_id, col in enumerate(spec.cols)
+    ]
+    return local_frame(
+        spark, header_rows, "table_id int, col_id int, header string"
     ).withColumn("header_tokenized", tokenize_col(F.col("header")))
 
 
-def row_keys_for(cells: DataFrame, hash_udf, distinct_tokens: bool = False) -> DataFrame:
-    """Per-row super keys from any (hi, lo) hash UDF: OR-fold over the
-    row's cell hashes (data_handler.py:280-283) — supports the reference's
-    pluggable ``hash_function`` knob (data_handler.py:89,109).
+def index_members(
+    spark: SparkSession,
+    keyed: DataFrame,
+    tables: dict[str, DataFrame],
+    specs: dict[str, LakeTableSpec],
+    with_super_keys: bool = True,
+) -> dict[str, DataFrame]:
+    """The index members of a keyed cell frame (:func:`build_keyed_cells`):
+    ``cells`` is its projection; ``row_keys`` is its ``col_id == 0`` slice
+    — every physical row has a col-0 cell and ``(table_id, row_id)`` is
+    unique per row, so the slice is one row per lake row with no
+    aggregation (zero keys when ``with_super_keys=False``);
+    ``table_info`` and ``col_flags`` aggregate over it; the headers come
+    from the specs."""
+    from datalake_indexes_spark.operators.cocoa import is_numeric_flags
 
-    ``distinct_tokens=True`` runs the Python hash over the *global distinct
-    token set* only and joins the pair back onto cells — the Arrow crossing
-    shrinks from O(cells) to O(vocabulary), at the price of a full-lake
-    shuffle join on the token string.  Measured at sf0.1 (4.7M cells, 166k
-    vocabulary, local[32]): distinct-token 2.1-3.7s vs per-cell memo UDF
-    0.7-1.1s — the memo already makes Python work O(vocabulary-per-worker)
-    and the columnar Arrow crossing is cheaper than two extra shuffles, so
-    the per-cell path is the default.  Flip to True only when the hash
-    itself dominates (near-unique vocabulary with an expensive hash_fn,
-    where per-worker memos never hit).
-    """
-    if distinct_tokens:
-        hashed = (
-            cells.select("tokenized")
-            .distinct()
-            .withColumn("__h", hash_udf(F.col("tokenized")))
-        )
-        keyed = cells.join(hashed, "tokenized")
+    cells = keyed.select("table_id", "col_id", "row_id", "tokenized")
+    if with_super_keys:
+        hi, lo = F.col("super_key_hi"), F.col("super_key_lo")
     else:
-        keyed = cells.withColumn("__h", hash_udf(F.col("tokenized")))
+        hi = lo = F.lit(0).cast("long")
+    row_keys = keyed.filter(F.col("col_id") == 0).select(
+        "table_id", "row_id", hi.alias("super_key_hi"), lo.alias("super_key_lo")
+    )
+    table_names = local_frame(
+        spark,
+        [(spec.table_id, name) for name, spec in specs.items() if name in tables],
+        "table_id int, dataset_name string",
+    )
+    table_info = (
+        keyed.groupBy("table_id")
+        .agg(
+            F.max("row_id").alias("max_row_id"),
+            F.max("col_id").cast("int").alias("max_col_id"),
+        )
+        .join(F.broadcast(table_names), "table_id")
+        .select("table_id", "dataset_name", "max_row_id", "max_col_id")
+    )
+    return {
+        "cells": cells,
+        "row_keys": row_keys,
+        "column_headers": lake_headers(spark, tables, specs),
+        "table_info": table_info,
+        "col_flags": is_numeric_flags(cells),
+    }
+
+
+def row_keys_for(cells: DataFrame, hash_udf) -> DataFrame:
+    """Per-row super keys of an existing cell frame from any (hi, lo) hash
+    UDF: OR-fold over the row's cell hashes (data_handler.py:280-283) —
+    for cells that were not built keyed (folder ingest) and for
+    re-keying an index under another ``hash_function``
+    (data_handler.py:89,109)."""
+    keyed = cells.withColumn("__h", hash_udf(F.col("tokenized")))
     return keyed.groupBy("table_id", "row_id").agg(
         F.bit_or(F.col("__h.hi")).alias("super_key_hi"),
         F.bit_or(F.col("__h.lo")).alias("super_key_lo"),
@@ -326,80 +336,24 @@ def build_index(
 ) -> LakeIndex:
     """Build the full LakeIndex from raw lake tables.
 
-    Mirrors ``DataHandler.update_index`` (data_handler.py:641-651) as one
-    declarative job: cells = union of per-table unpivots; super keys =
-    ``bit_or(xash(token))`` per row (data_handler.py:280-283); headers and
-    table_info as side aggregates.
+    Mirrors ``DataHandler.update_index`` (data_handler.py:641-651) in one
+    pass: the keyed cell frame (:func:`build_keyed_cells` — fused
+    tokenize+XASH per column, or ``hash_function`` over the JVM tokens,
+    and the per-row OR-fold of data_handler.py:280-283) is the single
+    lake-sized computation, and every member is derived from it
+    (:func:`index_members`).  The index stays lazy; the frame is
+    registered as the index's shared frame, so ``save``/
+    ``save_version``/``upsert_into`` materialize it once for all their
+    member writes and release it afterwards, and ``uncache`` releases it.
+    Without super keys the frame carries no keys and runs no Python UDF.
     """
-    # per-table prep (row numbering triggers one small collect each) runs
-    # in parallel threads — Spark schedules the 10 jobs concurrently
-    # instead of serializing their startup latency
-    from concurrent.futures import ThreadPoolExecutor
-
-    active = [(n, s) for n, s in specs.items() if n in tables]
-    with ThreadPoolExecutor(max_workers=min(len(active), 8) or 1) as pool:
-        cell_parts = list(
-            pool.map(lambda ns: unpivot_to_cells(tables[ns[0]], ns[1]), active)
-        )
-    header_rows = []
-    for name, spec in active:
-        for col_id, col in enumerate(spec.cols):
-            header_rows.append((spec.table_id, col_id, col))
-
-    if not cell_parts:
-        raise ValueError("build_index: no tables to index (empty lake)")
-    cells = cell_parts[0]
-    for part in cell_parts[1:]:
-        cells = cells.unionByName(part)
-
-    headers = spark.createDataFrame(
-        header_rows, "table_id int, col_id int, header string"
-    ).withColumn("header_tokenized", tokenize_col(F.col("header")))
-
-    table_names = spark.createDataFrame(
-        [(spec.table_id, name) for name, spec in specs.items() if name in tables],
-        "table_id int, dataset_name string",
+    keyed = build_keyed_cells(
+        spark, tables, specs, hash_size=hash_size, rotation=rotation,
+        number_of_ones=number_of_ones, hash_function=hash_function,
+        with_super_keys=with_super_keys,
     )
-    table_info = (
-        cells.groupBy("table_id")
-        .agg(
-            F.max("row_id").alias("max_row_id"),
-            F.max("col_id").cast("int").alias("max_col_id"),
-        )
-        .join(F.broadcast(table_names), "table_id")
-        .select("table_id", "dataset_name", "max_row_id", "max_col_id")
-    )
-
-    if with_super_keys:
-        if hash_function is not None:
-            from datalake_indexes_spark.functions.hashes import hash_pandas_udf
-
-            hash_udf = hash_pandas_udf(hash_function)
-        else:
-            hash_udf = xash_pandas_udf(
-                hash_size=hash_size, rotation=rotation, number_of_ones=number_of_ones
-            )
-        row_keys = row_keys_for(cells, hash_udf)
-    else:
-        row_keys = (
-            cells.groupBy("table_id", "row_id")
-            .agg(
-                F.lit(0).cast("long").alias("super_key_hi"),
-                F.lit(0).cast("long").alias("super_key_lo"),
-            )
-        )
-
-    from datalake_indexes_spark.operators.cocoa import is_numeric_flags
-
-    return LakeIndex(
-        cells=cells,
-        row_keys=row_keys,
-        column_headers=headers,
-        table_info=table_info,
-        col_flags=is_numeric_flags(cells),
-        token_stats=(
-            token_stats_for(cells, threshold=hot_token_threshold)
-            if with_token_stats
-            else None
-        ),
-    )
+    idx = LakeIndex(**index_members(spark, keyed, tables, specs, with_super_keys))
+    if with_token_stats:
+        idx.token_stats = token_stats_for(idx.cells, threshold=hot_token_threshold)
+    idx._shared_keyed = keyed
+    return idx

@@ -22,8 +22,10 @@ two B-trees (data_handler.py:205-230).
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 from dataclasses import dataclass
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -66,6 +68,26 @@ class LakeIndex:
     # salted_probe_join); built by token_stats_for / build_index(
     # with_token_stats=True), persisted with the index
     token_stats: DataFrame | None = None
+    # the one lake-sized frame every member derives from, when the builder
+    # left it lazy (build_index); not a field — set by the builder, held by
+    # the writers (_shared_held) and released by uncache()
+    _shared_keyed = None
+
+    @contextmanager
+    def _shared_held(self):
+        """Hold the shared keyed frame persisted while a writer runs its
+        member writes, so the lake is scanned and tokenized once for all
+        of them; released on exit (the lazy index still recomputes from
+        its lineage).  A frame someone already persists is left alone."""
+        df = self._shared_keyed
+        held = df is not None and df.storageLevel == StorageLevel.NONE
+        if held:
+            df.persist()
+        try:
+            yield
+        finally:
+            if held:
+                df.unpersist()
 
     def cache(self) -> "LakeIndex":
         self.cells = self.cells.cache()
@@ -81,9 +103,10 @@ class LakeIndex:
         return self
 
     def uncache(self) -> "LakeIndex":
-        """Release every persisted member plus any staging frames a
-        builder registered (``_staging_frames``) — unpersist is a no-op on
-        frames that were never cached, so this is always safe to call."""
+        """Release every persisted member plus the frames a builder
+        registered (``_shared_keyed``, ``_staging_frames``) — unpersist is
+        a no-op on frames that were never cached, so this is always safe
+        to call."""
         for df in (
             self.cells,
             self.row_keys,
@@ -92,6 +115,7 @@ class LakeIndex:
             self.col_flags,
             self.cells_keyed,
             self.token_stats,
+            self._shared_keyed,
             *getattr(self, "_staging_frames", []),
         ):
             if df is not None:
@@ -149,23 +173,24 @@ class LakeIndex:
     _CURRENT = "_CURRENT"
     _VERSIONS = "_versions"
 
+    def _write_row_members(self, root: str, mode: str, **options) -> None:
+        """``cells`` (sorted by token within each table partition) and
+        ``row_keys``, both partitioned by ``table_id``."""
+        cells = self.cells.repartition("table_id").sortWithinPartitions("tokenized")
+        for name, df in (("cells", cells), ("row_keys", self.row_keys)):
+            df.write.mode(mode).options(**options).partitionBy("table_id").parquet(
+                os.path.join(root, name)
+            )
+
     def _write_members(self, root: str, mode: str = "overwrite") -> None:
-        (
-            self.cells.repartition("table_id")
-            .sortWithinPartitions("tokenized")
-            .write.mode(mode)
-            .partitionBy("table_id")
-            .parquet(os.path.join(root, "cells"))
-        )
-        self.row_keys.write.mode(mode).partitionBy("table_id").parquet(
-            os.path.join(root, "row_keys")
-        )
-        self.column_headers.write.mode(mode).parquet(os.path.join(root, "column_headers"))
-        self.table_info.write.mode(mode).parquet(os.path.join(root, "table_info"))
-        if self.col_flags is not None:
-            self.col_flags.write.mode(mode).parquet(os.path.join(root, "col_flags"))
-        if self.token_stats is not None:
-            self.token_stats.write.mode(mode).parquet(os.path.join(root, "token_stats"))
+        with self._shared_held():
+            self._write_row_members(root, mode)
+            self.column_headers.write.mode(mode).parquet(os.path.join(root, "column_headers"))
+            self.table_info.write.mode(mode).parquet(os.path.join(root, "table_info"))
+            if self.col_flags is not None:
+                self.col_flags.write.mode(mode).parquet(os.path.join(root, "col_flags"))
+            if self.token_stats is not None:
+                self.token_stats.write.mode(mode).parquet(os.path.join(root, "token_stats"))
 
     def save(self, path: str, mode: str = "overwrite") -> None:
         """Materialize the index (S7/S8 — replaces COPY + B-tree builds).
@@ -211,20 +236,21 @@ class LakeIndex:
                 writer = writer.option("path", os.path.join(path, name))
             writer.saveAsTable(f"{table_prefix}_{name}")
 
-        _write(self.cells, "cells", ["tokenized"])
-        _write(self.row_keys, "row_keys", ["table_id", "row_id"])
-        for name, df in (
-            ("column_headers", self.column_headers),
-            ("table_info", self.table_info),
-            ("col_flags", self.col_flags),
-        ):
-            if df is None:
-                continue
-            spark.sql(f"DROP TABLE IF EXISTS {table_prefix}_{name}")
-            writer = df.write.mode("overwrite").format("parquet")
-            if path is not None:
-                writer = writer.option("path", os.path.join(path, name))
-            writer.saveAsTable(f"{table_prefix}_{name}")
+        with self._shared_held():
+            _write(self.cells, "cells", ["tokenized"])
+            _write(self.row_keys, "row_keys", ["table_id", "row_id"])
+            for name, df in (
+                ("column_headers", self.column_headers),
+                ("table_info", self.table_info),
+                ("col_flags", self.col_flags),
+            ):
+                if df is None:
+                    continue
+                spark.sql(f"DROP TABLE IF EXISTS {table_prefix}_{name}")
+                writer = df.write.mode("overwrite").format("parquet")
+                if path is not None:
+                    writer = writer.option("path", os.path.join(path, name))
+                writer.saveAsTable(f"{table_prefix}_{name}")
 
     def upsert_into(self, path: str) -> list[int]:
         """Partition-level MERGE of this (delta) index into a
@@ -264,62 +290,53 @@ class LakeIndex:
                 "upsert_into targets the direct save() layout; versioned "
                 "indexes take whole snapshots via save_version()"
             )
-        spark = self.cells.sparkSession
-        ids = [r.table_id for r in self.table_info.select("table_id").distinct().collect()]
-        if not ids:
-            return []
+        with self._shared_held():
+            spark = self.cells.sparkSession
+            ids = [r.table_id for r in self.table_info.select("table_id").distinct().collect()]
+            if not ids:
+                return []
 
-        # token_stats maintenance FIRST — it reads the partitions the
-        # cells overwrite below replaces
-        stats_path = os.path.join(path, "token_stats")
-        new_stats = None
-        if os.path.isdir(stats_path):
-            old_part = spark.read.parquet(os.path.join(path, "cells")).filter(
-                F.col("table_id").isin(ids)
-            )
-            minus = old_part.groupBy("tokenized").agg(F.count(F.lit(1)).alias("__minus"))
-            plus = self.cells.groupBy("tokenized").agg(F.count(F.lit(1)).alias("__plus"))
-            stats = spark.read.parquet(stats_path)
-            new_stats = (
-                stats.join(minus, "tokenized", "left")
-                .join(plus, "tokenized", "left")
-                .select(
-                    "tokenized",
-                    (
-                        F.col("cnt")
-                        - F.coalesce("__minus", F.lit(0))
-                        + F.coalesce("__plus", F.lit(0))
-                    ).alias("cnt"),
+            # token_stats maintenance FIRST — it reads the partitions the
+            # cells overwrite below replaces
+            stats_path = os.path.join(path, "token_stats")
+            new_stats = None
+            if os.path.isdir(stats_path):
+                old_part = spark.read.parquet(os.path.join(path, "cells")).filter(
+                    F.col("table_id").isin(ids)
                 )
-                .filter(F.col("cnt") > 0)
-            )
+                minus = old_part.groupBy("tokenized").agg(F.count(F.lit(1)).alias("__minus"))
+                plus = self.cells.groupBy("tokenized").agg(F.count(F.lit(1)).alias("__plus"))
+                stats = spark.read.parquet(stats_path)
+                new_stats = (
+                    stats.join(minus, "tokenized", "left")
+                    .join(plus, "tokenized", "left")
+                    .select(
+                        "tokenized",
+                        (
+                            F.col("cnt")
+                            - F.coalesce("__minus", F.lit(0))
+                            + F.coalesce("__plus", F.lit(0))
+                        ).alias("cnt"),
+                    )
+                    .filter(F.col("cnt") > 0)
+                )
 
-        if new_stats is not None:
-            _stage_swap(new_stats, stats_path)
+            if new_stats is not None:
+                _stage_swap(new_stats, stats_path)
 
-        (
-            self.cells.repartition("table_id")
-            .sortWithinPartitions("tokenized")
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("table_id")
-            .parquet(os.path.join(path, "cells"))
-        )
-        self.row_keys.write.mode("overwrite").option(
-            "partitionOverwriteMode", "dynamic"
-        ).partitionBy("table_id").parquet(os.path.join(path, "row_keys"))
+            self._write_row_members(path, "overwrite", partitionOverwriteMode="dynamic")
 
-        for member, delta in (
-            ("column_headers", self.column_headers),
-            ("table_info", self.table_info),
-            ("col_flags", self.col_flags),
-        ):
-            mpath = os.path.join(path, member)
-            if delta is None or not os.path.isdir(mpath):
-                continue
-            old = spark.read.parquet(mpath).filter(~F.col("table_id").isin(ids))
-            _stage_swap(old.unionByName(delta.select(*old.columns)), mpath)
-        return ids
+            for member, delta in (
+                ("column_headers", self.column_headers),
+                ("table_info", self.table_info),
+                ("col_flags", self.col_flags),
+            ):
+                mpath = os.path.join(path, member)
+                if delta is None or not os.path.isdir(mpath):
+                    continue
+                old = spark.read.parquet(mpath).filter(~F.col("table_id").isin(ids))
+                _stage_swap(old.unionByName(delta.select(*old.columns)), mpath)
+            return ids
 
     @classmethod
     def delete_tables(cls, spark: SparkSession, path: str, ids: list[int]) -> None:

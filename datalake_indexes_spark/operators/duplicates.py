@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from datalake_indexes_spark.index.lake_index import LakeIndex
+from datalake_indexes_spark.session import local_frame
 
 
 def row_fingerprints(index: LakeIndex) -> DataFrame:
@@ -229,9 +230,9 @@ class DuplicateDetection:
                 else:
                     parent[ra] = rb
         rows = [(t, find(t)) for t in sorted(parent)]
-        return relations.sparkSession.createDataFrame(
-            rows or [(None, None)], "table_id long, representative long"
-        ).filter(F.col("table_id").isNotNull())
+        return local_frame(
+            relations.sparkSession, rows, "table_id long, representative long"
+        )
 
     @staticmethod
     def remove_duplicate_tables(top_k: DataFrame, relations: DataFrame) -> DataFrame:

@@ -83,23 +83,6 @@ def _numbered_probe(
 _INDEX_CACHE: dict[tuple[str, bool], LakeIndex] = {}
 
 
-def _keyed_view(cells: DataFrame) -> DataFrame:
-    """Denormalized (cells + per-row super key) in ONE shuffle: the bit_or
-    as a window aggregate over (table_id, row_id) — measured 4-8x faster
-    than groupBy + join-back at sf0.1."""
-    from pyspark.sql import Window
-
-    from datalake_indexes_spark.functions.xash import xash_pandas_udf
-
-    w = Window.partitionBy("table_id", "row_id")
-    return (
-        cells.withColumn("__h", xash_pandas_udf()(F.col("tokenized")))
-        .withColumn("super_key_hi", F.bit_or(F.col("__h.hi")).over(w))
-        .withColumn("super_key_lo", F.bit_or(F.col("__h.lo")).over(w))
-        .drop("__h")
-    )
-
-
 def testdata_index(spark: SparkSession, sf_dir: str, with_super_keys: bool = True) -> LakeIndex:
     """Session-cached lake index.  ONE cached artifact backs both
     variants: the denormalized keyed cell view, built SHUFFLE-FREE in the
@@ -108,15 +91,15 @@ def testdata_index(spark: SparkSession, sf_dir: str, with_super_keys: bool = Tru
     sort+``bit_or`` is gone) and then explicitly repartitioned by
     (table_id, row_id) so the cache keeps the clustered layout MATE's
     verify joins and the row-grouping operators rely on being
-    exchange-free.  ``cells`` is a projection of it; ``row_keys`` (and
-    the base variant's zero-key frame) are the ``col_id == 0`` slice —
-    one row per physical lake row by construction, no aggregation."""
+    exchange-free.  The members are :func:`index_members` of it — the
+    same projection ``build_index`` uses — and the base variant swaps in
+    zero keys over the same ``col_id == 0`` slice."""
     base_key = (os.path.abspath(sf_dir), False)
     key = (os.path.abspath(sf_dir), True)
     want = key if with_super_keys else base_key
 
     if key not in _INDEX_CACHE and base_key not in _INDEX_CACHE:
-        from datalake_indexes_spark.index.builder import build_keyed_cells, lake_headers
+        from datalake_indexes_spark.index.builder import build_keyed_cells, index_members
 
         tables = load_tables(spark, sf_dir)
         # localCheckpoint BEFORE the repartition+cache truncates the cached
@@ -143,56 +126,25 @@ def testdata_index(spark: SparkSession, sf_dir: str, with_super_keys: bool = Tru
             .repartition("table_id", "row_id")
             .cache()
         )
-        cells_view = keyed.select("table_id", "col_id", "row_id", "tokenized")
-        row0 = keyed.filter(F.col("col_id") == 0)
-        headers = lake_headers(spark, tables, TESTDATA_LAKE_SPEC).cache()
-        table_names = spark.createDataFrame(
-            [(s.table_id, n) for n, s in TESTDATA_LAKE_SPEC.items() if n in tables],
-            "table_id int, dataset_name string",
-        )
-        table_info = (
-            keyed.groupBy("table_id")
-            .agg(
-                F.max("row_id").alias("max_row_id"),
-                F.max("col_id").cast("int").alias("max_col_id"),
-            )
-            .join(F.broadcast(table_names), "table_id")
-            .select("table_id", "dataset_name", "max_row_id", "max_col_id")
-        ).cache()
-        from datalake_indexes_spark.operators.cocoa import is_numeric_flags
-
-        col_flags = is_numeric_flags(cells_view).cache()
-        zero_keys = row0.select(
-            "table_id",
-            "row_id",
-            F.lit(0).cast("long").alias("super_key_hi"),
-            F.lit(0).cast("long").alias("super_key_lo"),
-        )
-        base_idx = LakeIndex(
-            cells=cells_view,
-            row_keys=zero_keys,  # zero-key frame, derived off the cache
-            column_headers=headers,
-            table_info=table_info,
-            col_flags=col_flags,
-            # cells_keyed stays None: the base variant's keyed_cells()
-            # must agree with its zero row_keys — exposing the real-key
-            # view here would hand consumers keys its own row_keys denies
-        )
+        members = index_members(spark, keyed, tables, TESTDATA_LAKE_SPEC)
+        for name in ("column_headers", "table_info", "col_flags"):
+            members[name] = members[name].cache()
+        # the base variant: zero keys over the same col-0 slice, and no
+        # cells_keyed — its keyed_cells() must agree with its zero
+        # row_keys; the real-key view would hand consumers keys its own
+        # row_keys denies
+        zero = F.lit(0).cast("long")
+        base_idx = LakeIndex(**{
+            **members,
+            "row_keys": members["row_keys"].withColumns(
+                {"super_key_hi": zero, "super_key_lo": zero}
+            ),
+        })
         # the shared cache is registered as a staging frame so uncache
         # on either variant frees it
-        base_idx._shared_keyed = keyed
         base_idx._staging_frames = [keyed]
         _INDEX_CACHE[base_key] = base_idx
-        _INDEX_CACHE[key] = LakeIndex(
-            cells=cells_view,
-            row_keys=row0.select(
-                "table_id", "row_id", "super_key_hi", "super_key_lo"
-            ),
-            column_headers=headers,
-            table_info=table_info,
-            col_flags=col_flags,
-            cells_keyed=keyed,
-        )
+        _INDEX_CACHE[key] = LakeIndex(**members, cells_keyed=keyed)
     return _INDEX_CACHE[want]
 
 

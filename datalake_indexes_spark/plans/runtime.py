@@ -135,3 +135,38 @@ def runtime_report_of(build, spark, min_stage_ms: int = 0) -> dict:
         "max_task_skew": max(skews) if skews else None,
         "stages": stages,
     }
+
+
+def sql_executions(spark, after_id: int = -1) -> list[dict]:
+    """The SQL executions with id > ``after_id``, read from the SQL status
+    store: ``{id, description, jobs, nodes}`` with ``nodes`` one
+    ``(name, desc, rows)`` per node of the execution's plan graph, where
+    ``rows`` is its "number of output rows" metric (None when the node
+    has none).  A cached relation's graph still lists the plan it caches;
+    nodes the cache served report 0 rows, so ``rows`` tells what ran."""
+    try:
+        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+    except Exception:
+        time.sleep(0.5)
+    store = spark._jsparkSession.sharedState().statusStore()
+    execs = store.executionsList()
+    out = []
+    for i in range(execs.size()):
+        e = execs.apply(i)
+        if e.executionId() <= after_id:
+            continue
+        values = store.executionMetrics(e.executionId())
+        nodes = []
+        graph = store.planGraph(e.executionId()).allNodes()
+        for j in range(graph.size()):
+            node, rows = graph.apply(j), None
+            metrics = node.metrics()
+            for k in range(metrics.size()):
+                m = metrics.apply(k)
+                if m.name() == "number of output rows":
+                    v = values.get(m.accumulatorId())
+                    rows = int(v.get().replace(",", "")) if v.isDefined() else 0
+            nodes.append((node.name(), node.desc(), rows))
+        out.append({"id": e.executionId(), "description": e.description(),
+                    "jobs": e.jobs().size(), "nodes": nodes})
+    return sorted(out, key=lambda r: r["id"])

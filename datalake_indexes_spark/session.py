@@ -9,9 +9,11 @@ Defaults are tuned for correctness-at-scale first:
 
 from __future__ import annotations
 
+import json
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 
 def get_spark(
@@ -100,3 +102,23 @@ def get_spark(
         .config("spark.ui.showConsoleProgress", "false")
     )
     return builder.getOrCreate()
+
+
+def local_frame(spark: SparkSession, rows: list[tuple], schema: str) -> DataFrame:
+    """Small driver-built frame with no Python RDD behind it.
+
+    ``createDataFrame(list)`` parallelizes the rows into a Python RDD, so
+    every evaluation of the frame runs Python worker tasks.  Here the rows
+    travel as ONE JSON literal that ``from_json`` + ``inline`` expand in
+    the JVM (the optimizer folds it to a constant array): a fixed number of
+    py4j calls per frame whatever its row count.  ``schema`` is a DDL
+    string such as ``"table_id int, header string"``; an empty ``rows``
+    gives an empty frame of that schema.  The literal travels with every
+    plan that carries it, so this is for metadata-sized inputs."""
+    from pyspark.sql.types import _parse_datatype_string
+
+    names = _parse_datatype_string(schema).names
+    payload = json.dumps([dict(zip(names, r)) for r in rows])
+    return spark.range(1, numPartitions=1).select(
+        F.inline(F.from_json(F.lit(payload), f"array<struct<{schema}>>"))
+    )

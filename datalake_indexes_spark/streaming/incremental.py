@@ -6,10 +6,9 @@ Two streaming shapes:
 
 - :func:`incremental_index_stream` — the reference's index refresh as a
   stream: new parquet files landing in a lake folder are tokenized,
-  unpivoted and super-keyed per micro-batch (the same builder pipeline)
-  and appended to the persisted index.  ``foreachBatch`` is required
-  because one input feeds two sinks (cells + row_keys) and the super-key
-  build contains an aggregation.
+  unpivoted and super-keyed per micro-batch (the builder's one-pass keyed
+  unpivot) and appended to the persisted index.  ``foreachBatch`` is
+  required because one input feeds two sinks (cells + row_keys).
 - :func:`windowed_event_counts` — watermarked tumbling-window aggregation
   over an event stream (late data dropped after the watermark), the
   streaming twin of the batch ``events_window_agg`` query.
@@ -23,8 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from datalake_indexes_spark.functions.xash import xash_pandas_udf
-from datalake_indexes_spark.index.builder import row_keys_for, unpivot_to_cells
+from datalake_indexes_spark.index.builder import build_keyed_cells
 from datalake_indexes_spark.sources.catalog import LakeTableSpec
 
 
@@ -52,7 +50,6 @@ def make_index_batch_processor(spec: LakeTableSpec, index_path: str):
 
     cells_path = os.path.join(index_path, "cells")
     keys_path = os.path.join(index_path, "row_keys")
-    xash_udf = xash_pandas_udf()
 
     def _sink_layout(path: str, df: DataFrame) -> str:
         """Classify the on-disk layout of an existing sink: ``"current"``
@@ -144,31 +141,33 @@ def make_index_batch_processor(spec: LakeTableSpec, index_path: str):
             if "PATH_NOT_FOUND" not in msg and "Path does not exist" not in msg:
                 raise
             offset = 0
-        cells = (
-            unpivot_to_cells(batch_df, spec)
+        # row_id is unique per batch (a row number over the batch, or the
+        # catalog-vouched dense key) and the offset shifts every row
+        # alike, so (table_id, row_id) stays unique and row_keys is the
+        # col_id == 0 slice of the keyed cells — no second hash pass
+        keyed = (
+            build_keyed_cells(sess, {spec.name: batch_df}, {spec.name: spec})
             .withColumn("row_id", F.col("row_id") + F.lit(offset))
+            .withColumn("batch_id", F.lit(batch_id))
             .persist()
         )
         try:
-            (
-                cells.withColumn("batch_id", F.lit(batch_id))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("table_id", "batch_id")
-                .parquet(cells_path)
-            )
-            (
-                row_keys_for(cells, xash_udf)
-                .withColumn("batch_id", F.lit(batch_id))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("table_id", "batch_id")
-                .parquet(keys_path)
-            )
+            for path, rows in (
+                (cells_path, keyed.select("table_id", "col_id", "row_id", "tokenized", "batch_id")),
+                (keys_path, keyed.filter(F.col("col_id") == 0).select(
+                    "table_id", "row_id", "super_key_hi", "super_key_lo", "batch_id"
+                )),
+            ):
+                (
+                    rows.write.mode("overwrite")
+                    .option("partitionOverwriteMode", "dynamic")
+                    .partitionBy("table_id", "batch_id")
+                    .parquet(path)
+                )
         finally:
             # a failed write (the retry crash window) must not leak the
             # cached batch — retries would accumulate cached copies
-            cells.unpersist()
+            keyed.unpersist()
 
     return process_batch
 

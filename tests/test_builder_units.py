@@ -1,9 +1,10 @@
 """Unit tests for index/builder.py primitives: the collect-free numeric
-row-numbering path and the two row_keys_for strategies."""
+row-numbering path, the sampled-range fallback and the fused
+tokenize+hash unpivot."""
 
 from __future__ import annotations
 
-from datalake_indexes_spark.index.builder import row_keys_for, with_global_row_number
+from datalake_indexes_spark.index.builder import with_global_row_number
 
 
 def _check_ids(spark, values, order_key="k"):
@@ -43,22 +44,6 @@ def test_string_key_falls_back_to_sampled_range(spark):
     out = with_global_row_number(df, ["s"]).collect()
     got = {r["s"]: r["row_id"] for r in out}
     assert got == {"apple": 0, "fig": 1, "pear": 2, "zoo": 3}
-
-
-def test_row_keys_distinct_token_path_identical(spark):
-    """Both row_keys_for strategies produce bit-identical super keys."""
-    from datalake_indexes_spark.functions.xash import xash_pandas_udf
-
-    rows = [
-        (0, 0, r, f"tok{r % 5}") for r in range(40)
-    ] + [(0, 1, r, f"val{r}") for r in range(40)] + [(1, 0, r, "") for r in range(6)]
-    cells = spark.createDataFrame(
-        rows, "table_id int, col_id int, row_id long, tokenized string"
-    )
-    a = row_keys_for(cells, xash_pandas_udf(), distinct_tokens=False).collect()
-    b = row_keys_for(cells, xash_pandas_udf(), distinct_tokens=True).collect()
-    assert sorted(map(tuple, a)) == sorted(map(tuple, b))
-    assert len(a) == 46
 
 
 def test_get_table_reapplies_headers(spark):

@@ -36,6 +36,15 @@ def _write_tied_parquet(spark, tmp_path, n=200, tie_width=10):
     return path
 
 
+def _read_one_partition(spark, path):
+    """The tied file read back as ONE scan partition: the tie contract is
+    file order within a single scan, so a split scan would make a failure
+    here ambiguous (shuffle fetch order vs. a broken numbering)."""
+    df = spark.read.parquet(path)
+    assert df.rdd.getNumPartitions() == 1
+    return df
+
+
 def _expected_ids(path):
     """Ground truth from the file itself: stable sort by k keeps file
     order within ties; id = position."""
@@ -46,7 +55,7 @@ def _expected_ids(path):
 
 def test_row_number_ties_break_by_file_order(spark, tmp_path):
     path = _write_tied_parquet(spark, tmp_path)
-    df = spark.read.parquet(path)
+    df = _read_one_partition(spark, path)
     out = with_global_row_number(df, ["k"], out_col="row_id").collect()
     got = {r["v"]: r["row_id"] for r in out}
     assert got == _expected_ids(path)
@@ -56,7 +65,7 @@ def test_projection_numbering_matches_full_width(spark, tmp_path):
     """mate.py prepare_input numbers a slim projection of the probe scan;
     the ids must equal numbering the full-width frame (assumption 2)."""
     path = _write_tied_parquet(spark, tmp_path)
-    df = spark.read.parquet(path)
+    df = _read_one_partition(spark, path)
     full = {
         r["v"]: r["row_id"]
         for r in with_global_row_number(df, ["k"], out_col="row_id").collect()
@@ -70,16 +79,13 @@ def test_projection_numbering_matches_full_width(spark, tmp_path):
     assert slim == full
 
 
-def test_prepare_input_dedup_keeps_min_id_winner(spark, tmp_path, sf_dir):
-    """End-to-end through prepare_input: duplicate query values must keep
-    the row whose mate_row_id is the file-order winner (pandas
-    drop_duplicates keep='first' semantics — the min id of the group)."""
+def _check_min_id_winner(spark, tmp_path, sf_dir, rows):
+    """prepare_input over ``rows`` (k, q) written as one file in the given
+    order: each query value keeps the mate_row_id of its stable-sort-by-k
+    winner (pandas drop_duplicates keep='first' — the min id of the
+    group)."""
     from datalake_indexes_spark.plans.queries._base import testdata_index
 
-    n, tie_width = 120, 6
-    # query value repeats across rows; order key has ties spanning
-    # different query values, so a tie reorder flips which value wins
-    rows = [(i // tie_width, f"q{i % 8}") for i in range(n)]
     df = spark.createDataFrame(rows, "k int, q string")
     path = str(tmp_path / "dupq.parquet")
     df.coalesce(1).write.mode("overwrite").parquet(path)
@@ -90,8 +96,31 @@ def test_prepare_input_dedup_keeps_min_id_winner(spark, tmp_path, sf_dir):
 
     mate = MATE(testdata_index(spark, sf_dir))
     out = mate.prepare_input(
-        spark.read.parquet(path), ["q"], input_order_by=["k"],
+        _read_one_partition(spark, path), ["q"], input_order_by=["k"],
         with_super_key=False,
     ).collect()
     got = {r["__q0"]: r["mate_row_id"] for r in out}
     assert got == expected
+
+
+def test_prepare_input_dedup_keeps_min_id_winner(spark, tmp_path, sf_dir):
+    """End-to-end through prepare_input: duplicate query values must keep
+    the row whose mate_row_id is the file-order winner."""
+    n, tie_width = 120, 6
+    # query value repeats across rows; order key has ties spanning
+    # different query values, so a tie reorder flips which value wins
+    rows = [(i // tie_width, f"q{i % 8}") for i in range(n)]
+    _check_min_id_winner(spark, tmp_path, sf_dir, rows)
+
+
+def test_prepare_input_dedup_min_id_winner_k_out_of_file_order(spark, tmp_path, sf_dir):
+    """The same contract when the order key is NOT monotone in file order:
+    the tie groups are written in a permuted order, so the stable sort by
+    k moves rows across groups and the winner is not the first row in
+    the file."""
+    n, tie_width = 120, 6
+    groups = n // tie_width
+    # 7 is coprime to 20 groups: a deterministic permutation of k
+    rows = [((i // tie_width) * 7 % groups, f"q{i % 8}") for i in range(n)]
+    assert [k for k, _ in rows] != sorted(k for k, _ in rows)
+    _check_min_id_winner(spark, tmp_path, sf_dir, rows)
