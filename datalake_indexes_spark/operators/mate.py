@@ -16,6 +16,10 @@ Here the whole search is one declarative DataFrame pipeline:
 6. score per (table, combination), best per table, global top-k
    (mate.py:457-504; reported score is count-1, mate.py:522-525).
 
+Steps 2-6 are one pipeline (``MATE._match`` + ``MATE._best_per_table``):
+``join_search`` runs it for one input, ``join_search_batch`` for a union of
+inputs with ``__query_id`` prepended to every grouping and join key.
+
 Deviations from the reference (intended-semantics fixes, SURVEY.md §3.B.4):
 - the ``tableid``/``table_id`` loop-variable bug (mate.py:318-320) is fixed —
   every candidate table is scored on its own posting list;
@@ -29,6 +33,7 @@ Deviations from the reference (intended-semantics fixes, SURVEY.md §3.B.4):
 
 from __future__ import annotations
 
+from collections.abc import Sequence
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, Window
@@ -250,7 +255,6 @@ class MATE:
         hot_token_threshold: int = 100_000,
     ) -> MateResult:
         degree = len(query_columns)
-        cells = self.index.cells
 
         inp = self.prepare_input(
             input_df,
@@ -276,238 +280,12 @@ class MATE:
         if small_input:
             inp = F.broadcast(inp)
 
-        # 2. posting fetch on first query column (mate.py:251-256).  With
-        # hash optimization the probe runs against the super-key-denormalized
-        # cell view (the reference's layout) so the hit set — often much
-        # larger than the lake — never joins row_keys afterwards.
-        # Degree 1 is special: the containment prefilter is provably a
-        # no-op (the hit row contains q0 by token equality, so its super
-        # key contains xash(q0) — the entire degree-1 query key), so the
-        # probe stays on the NARROW cell cache and step 4 is skipped —
-        # measured: the filter pass alone cost ~2.5 s on a 2M-row hit set
-        # at sf0.1 while pruning zero rows.
-        prefilter = use_hash_optimization and degree > 1
-        probe_cells = self.index.keyed_cells() if prefilter else cells
-        if small_input:
-            hits = probe_cells.join(
-                inp, probe_cells["tokenized"] == inp["__q0"], "inner"
-            )
-        else:
-            # non-broadcastable input: the shuffle join would funnel any
-            # hot token through one task (AQE's skew split is inert under
-            # the groupBy below — see salted_probe_join); salt apart the
-            # tokens the lake-side frequency scan marks as hot
-            hits = salted_probe_join(
-                probe_cells,
-                inp,
-                self._lake_hot_tokens(hot_token_threshold),
-                n_salt=n_salt,
-            )
-
-        # 5'. degree-1 fast path: the hits ARE the verification evidence.
-        # The degree-1 quirk re-verifies the single query column, so a
-        # pair's matched-column set __m0 is exactly {col_id : the row's
-        # cell token == this pair's __q0} — and every hit row of that
-        # (ext_row, mate_row) pair is one such cell (token equality is the
-        # join condition).  The generic path below would re-scan the lake
-        # for row_cells, shuffle-join it against pairs and run a
-        # collect_set keyed per PAIR (duplicating each row's aggregate
-        # once per hit column); here one aggregate keyed per ROW builds
-        # __m0 directly from hits and the pair set is its explode.
-        # Measured at sf0.1 (customer/c_custkey): 3 full cache scans +
-        # 74 MB shuffle into a 35s-CPU ObjectHashAggregate became 1 scan +
-        # an EXCHANGE-FREE aggregate (hits keep the cache's (table_id,
-        # row_id) clustering, a subset of the grouping key).
-        if degree == 1:
-            row_m = (
-                hits.select(
-                    "table_id",
-                    F.col("row_id").alias("ext_row_id"),
-                    "mate_row_id",
-                    "col_id",
-                )
-                .groupBy("table_id", "ext_row_id", "mate_row_id")
-                .agg(F.sort_array(F.collect_set("col_id")).alias("__m0"))
-                .persist()
-            )
-            # candidate cap on the SAME hit counts as the generic path:
-            # one hit row per (cell, input) match = sum of the per-row
-            # matched-column set sizes
-            table_hits = row_m.groupBy(F.col("table_id").alias("__t")).agg(
-                F.sum(F.size("__m0")).alias("count")
-            )
-            if min_join_ratio > 0:
-                table_hits = table_hits.filter(F.col("count") >= min_join_ratio)
-            cand_tables = (
-                table_hits.orderBy(F.desc("count"), F.asc("__t"))
-                .limit(k_c)
-                .select(F.col("__t").alias("table_id"))
-            )
-            capped = row_m.join(F.broadcast(cand_tables), "table_id", "inner")
-            pairs = capped.select(
-                "table_id",
-                "ext_row_id",
-                F.explode("__m0").alias("hit_col_id"),
-                "mate_row_id",
-                "__m0",
-            )
-            combo = F.concat_ws(
-                "_",
-                F.col("hit_col_id").cast("string"),
-                F.array_join(
-                    F.transform(F.col("__m0"), lambda c: c.cast("string")), "_"
-                ),
-            )
-            # __m0 is non-empty by construction (it contains hit_col_id),
-            # so every pair verifies — same as the generic degree-1 path
-            matches = pairs.withColumn("column_combination", combo).drop("__m0")
-            pairs = pairs.drop("__m0")
-            return self._score_and_finish(matches, pairs, k=k, stats=stats)
-
-        # The candidate-cap count below and the pair set both consume
-        # `hits`, and the broadcast(cand_tables) makes them SEQUENTIAL
-        # jobs — unpersisted, the second job re-scans the whole keyed cell
-        # cache and re-probes the input broadcast hash (measured at sf0.1,
-        # 600k-row lineitem probe: ~16s of task CPU per pass).  Persist a
-        # slim projection once: the cap job materializes it, the pair job
-        # reads it back.  (The same frame the old shape computed twice;
-        # MEMORY_AND_DISK, evicted under pressure.)
-        hits = hits.select(
-            "table_id",
-            "row_id",
-            "col_id",
-            "mate_row_id",
-            *[f"__q{i}" for i in range(degree)],
-            *(["__q_hi", "__q_lo", "super_key_hi", "super_key_lo"] if prefilter else []),
-        ).persist()
-
-        # 3. candidate cap: top k_c tables by hit count (mate.py:313-314);
-        #    min_join_ratio drops small posting lists (mate.py:325-326)
-        table_hits = hits.groupBy(F.col("table_id").alias("__t")).count()
-        if min_join_ratio > 0:
-            table_hits = table_hits.filter(F.col("count") >= min_join_ratio)
-        # orderBy().limit() plans as TakeOrderedAndProject: each partition
-        # keeps its local top-k_c and only those reach the driver-side
-        # merge — a no-partition row_number window would instead pull every
-        # per-table count through a single task (~1M rows at the
-        # reference's lake size).  Tie-break on __t keeps it deterministic.
-        cand_tables = (
-            table_hits.orderBy(F.desc("count"), F.asc("__t"))
-            .limit(k_c)
-            .select(F.col("__t").alias("table_id"))
+        hot_tokens = [] if small_input else self._lake_hot_tokens(hot_token_threshold)
+        matches, pairs = self._match(
+            inp, [], degree, use_hash_optimization and degree > 1, small_input,
+            k_c, min_join_ratio, hot_tokens, n_salt,
         )
-        hits = hits.join(F.broadcast(cand_tables), "table_id", "inner")
-
-        # 4. super-key containment prefilter (mate.py:390-394); degree 1
-        # skips it — see step 2
-        if prefilter:
-            hits = hits.filter(
-                superkey_contains(
-                    F.col("__q_hi"), F.col("__q_lo"),
-                    F.col("super_key_hi"), F.col("super_key_lo"),
-                )
-            )
-
-        pairs = hits.select(
-            "table_id",
-            F.col("row_id").alias("ext_row_id"),
-            F.col("col_id").alias("hit_col_id"),
-            "mate_row_id",
-            *[f"__q{i}" for i in range(degree)],
-        )
-
-        # 5. verification (mate.py:94-123 evaluate_rows, 443-455):
-        # every query column after the first must appear among the row's
-        # cells; matched col-ids are appended in ascending order.  (The
-        # degree-1 quirk — [-0:] slices the whole array, re-verifying the
-        # single query column — is served by the fast path above.)
-        verify_idx = list(range(1, degree))
-
-        # Only cells whose token equals SOME verify-column value can ever
-        # enter a collect_set below — semi-filter the lake by the distinct
-        # verify tokens BEFORE the (table_id, row_id) shuffle.  Catalyst
-        # cannot infer this (the membership test is inside an aggregate),
-        # and it typically drops the shuffled volume by the lake/input
-        # vocabulary ratio.  Pairs with no surviving cell row are correctly
-        # lost: they can never verify.
-        verify_tokens = (
-            inp.select(
-                F.explode(F.array(*[F.col(f"__q{i}") for i in verify_idx])).alias(
-                    "__cell_tok"
-                )
-            ).distinct()
-        )
-        if small_input:
-            verify_tokens = F.broadcast(verify_tokens)
-        row_cells = cells.select(
-            "table_id",
-            F.col("row_id").alias("ext_row_id"),
-            F.col("col_id").alias("__cell_col"),
-            F.col("tokenized").alias("__cell_tok"),
-        ).join(verify_tokens, "__cell_tok", "leftsemi")
-        joined = pairs.join(row_cells, ["table_id", "ext_row_id"], "inner")
-
-        agg_exprs = []
-        for i in verify_idx:
-            agg_exprs.append(
-                F.sort_array(
-                    F.collect_set(
-                        F.when(F.col("__cell_tok") == F.col(f"__q{i}"), F.col("__cell_col"))
-                    )
-                ).alias(f"__m{i}")
-            )
-        verified = joined.groupBy(
-            "table_id", "ext_row_id", "hit_col_id", "mate_row_id"
-        ).agg(*agg_exprs)
-
-        is_match = F.lit(True)
-        for i in verify_idx:
-            is_match = is_match & (F.size(F.col(f"__m{i}")) > 0)
-        verified = verified.withColumn("__match", is_match)
-
-        combo = F.concat_ws(
-            "_",
-            F.col("hit_col_id").cast("string"),
-            *[
-                F.array_join(F.transform(F.col(f"__m{i}"), lambda c: c.cast("string")), "_")
-                for i in verify_idx
-            ],
-        )
-        matches = verified.filter(F.col("__match")).withColumn("column_combination", combo)
-        return self._score_and_finish(matches, pairs, k=k, stats=stats)
-
-    # ------------------------------------------------------------------
-    def _score_and_finish(
-        self,
-        matches: DataFrame,
-        pairs: DataFrame,
-        k: int,
-        stats: dict | None,
-    ) -> MateResult:
-        """Steps 6-7 + A12 stats, shared by the degree-1 fast path and the
-        generic verification path (identical inputs -> identical result)."""
-        # 6. scoring: count per (table, combination) (mate.py:457-470);
-        # best combination per table; reported score = count - 1
-        combo_counts = matches.groupBy("table_id", "column_combination").agg(
-            F.count(F.lit(1)).alias("__cnt")
-        )
-        best = (
-            combo_counts.withColumn(
-                "__rk",
-                F.row_number().over(
-                    Window.partitionBy("table_id").orderBy(
-                        F.desc("__cnt"), F.asc("column_combination")
-                    )
-                ),
-            )
-            .filter(F.col("__rk") == 1)
-            .select(
-                (F.col("__cnt") - 1).cast("long").alias("score"),
-                "table_id",
-                "column_combination",
-            )
-        )
-        top_k = best.orderBy(F.desc("score"), F.asc("table_id")).limit(k)
+        top_k = self._best_per_table(matches, [], k)
 
         # 7. join maps (mate.py:473-486): ext_row -> input_row for the best
         # combination of each top table; last-write-wins in the reference —
@@ -545,6 +323,248 @@ class MATE:
             result.stats = stats
         return result
 
+    # ------------------------------------------------------------------
+    @staticmethod
+    def _top_n(df: DataFrame, keys: list[str], order: list, n: int) -> DataFrame:
+        """The first ``n`` rows of ``df`` by ``order``, per ``keys`` group.
+
+        Without keys, orderBy().limit() plans as TakeOrderedAndProject: each
+        partition keeps its local top-n and only those reach the driver-side
+        merge — a no-partition row_number window would instead pull every
+        row through a single task (~1M per-table counts at the reference's
+        lake size).  With keys, the window is PARTITIONED by them."""
+        if not keys:
+            return df.orderBy(*order).limit(n)
+        w = Window.partitionBy(*keys).orderBy(*order)
+        return (
+            df.withColumn("__rk", F.row_number().over(w))
+            .filter(F.col("__rk") <= n)
+            .drop("__rk")
+        )
+
+    def _match(
+        self,
+        inp: DataFrame,
+        keys: list[str],
+        degree: int,
+        prefilter: bool,
+        small_input: bool,
+        k_c: int,
+        min_join_ratio: int,
+        hot_tokens: Sequence[str] = (),
+        n_salt: int = 16,
+    ) -> tuple[DataFrame, DataFrame]:
+        """Steps 2-5 for the prepared (and, when ``small_input``, broadcast)
+        input ``inp``: ``(matches, pairs)`` — the verified pairs with their
+        ``column_combination``, and the candidate pairs that reached
+        verification.  ``keys`` are input columns that split it into
+        independent queries (``[]`` for one query); every grouping and join
+        key below is prefixed with them, so each query keeps its own
+        candidate cap and verification."""
+        cells = self.index.cells
+
+        # 2. posting fetch on first query column (mate.py:251-256).  With
+        # hash optimization the probe runs against the super-key-denormalized
+        # cell view (the reference's layout) so the hit set — often much
+        # larger than the lake — never joins row_keys afterwards.
+        # Degree 1 is special: the containment prefilter is provably a
+        # no-op (the hit row contains q0 by token equality, so its super
+        # key contains xash(q0) — the entire degree-1 query key), so the
+        # probe stays on the NARROW cell cache and step 4 is skipped —
+        # measured: the filter pass alone cost ~2.5 s on a 2M-row hit set
+        # at sf0.1 while pruning zero rows.
+        probe_cells = self.index.keyed_cells() if prefilter else cells
+        # a broadcast input has no hot tokens to salt apart: the probe is
+        # the plain join.  A non-broadcastable input's shuffle join would
+        # funnel any hot token through one task (AQE's skew split is inert
+        # under the groupBy below — see salted_probe_join); salt apart the
+        # tokens the lake-side frequency scan marks as hot
+        hits = salted_probe_join(probe_cells, inp, hot_tokens, n_salt=n_salt)
+
+        if degree == 1:
+            # 5'. degree-1 fast path: the hits ARE the verification
+            # evidence.  The degree-1 quirk re-verifies the single query
+            # column, so a pair's matched-column set __m0 is exactly
+            # {col_id : the row's cell token == this pair's __q0} — and
+            # every hit row of that (ext_row, mate_row) pair is one such
+            # cell (token equality is the join condition).  The generic
+            # path below would re-scan the lake for row_cells, shuffle-join
+            # it against pairs and run a collect_set keyed per PAIR
+            # (duplicating each row's aggregate once per hit column); here
+            # one aggregate keyed per ROW builds __m0 directly from hits and
+            # the pair set is its explode.  Measured at sf0.1
+            # (customer/c_custkey): 3 full cache scans + 74 MB shuffle into
+            # a 35s-CPU ObjectHashAggregate became 1 scan + an EXCHANGE-FREE
+            # aggregate (hits keep the cache's (table_id, row_id)
+            # clustering, a subset of the grouping key).
+            hits = (
+                hits.select(
+                    *keys, "table_id", F.col("row_id").alias("ext_row_id"),
+                    "mate_row_id", "col_id",
+                )
+                .groupBy(*keys, "table_id", "ext_row_id", "mate_row_id")
+                .agg(F.sort_array(F.collect_set("col_id")).alias("__m0"))
+                .persist()
+            )
+            # candidate cap on the SAME hit counts as the generic path:
+            # one hit row per (cell, input) match = sum of the per-row
+            # matched-column set sizes
+            table_hits = hits.groupBy(*keys, F.col("table_id").alias("__t")).agg(
+                F.sum(F.size("__m0")).alias("count")
+            )
+        else:
+            # The candidate-cap count below and the pair set both consume
+            # `hits`, and the broadcast(cand_tables) makes them SEQUENTIAL
+            # jobs — unpersisted, the second job re-scans the whole keyed
+            # cell cache and re-probes the input broadcast hash (measured at
+            # sf0.1, 600k-row lineitem probe: ~16s of task CPU per pass).
+            # Persist a slim projection once: the cap job materializes it,
+            # the pair job reads it back.  (The same frame the old shape
+            # computed twice; MEMORY_AND_DISK, evicted under pressure.)
+            hits = hits.select(
+                *keys,
+                "table_id",
+                "row_id",
+                "col_id",
+                "mate_row_id",
+                *[f"__q{i}" for i in range(degree)],
+                *(["__q_hi", "__q_lo", "super_key_hi", "super_key_lo"] if prefilter else []),
+            ).persist()
+            # 3. candidate cap: top k_c tables by hit count
+            #    (mate.py:313-314)
+            table_hits = hits.groupBy(*keys, F.col("table_id").alias("__t")).count()
+        # min_join_ratio drops small posting lists (mate.py:325-326)
+        if min_join_ratio > 0:
+            table_hits = table_hits.filter(F.col("count") >= min_join_ratio)
+        # tie-break on __t keeps the cap deterministic
+        cand_tables = self._top_n(
+            table_hits, keys, [F.desc("count"), F.asc("__t")], k_c
+        ).select(*keys, F.col("__t").alias("table_id"))
+        hits = hits.join(F.broadcast(cand_tables), [*keys, "table_id"], "inner")
+
+        if degree == 1:
+            pairs = hits.select(
+                *keys, "table_id", "ext_row_id",
+                F.explode("__m0").alias("hit_col_id"), "mate_row_id", "__m0",
+            )
+            combo = F.concat_ws(
+                "_",
+                F.col("hit_col_id").cast("string"),
+                F.array_join(
+                    F.transform(F.col("__m0"), lambda c: c.cast("string")), "_"
+                ),
+            )
+            # __m0 is non-empty by construction (it contains hit_col_id),
+            # so every pair verifies — same as the generic degree-1 path
+            matches = pairs.withColumn("column_combination", combo).drop("__m0")
+            return matches, pairs.drop("__m0")
+
+        # 4. super-key containment prefilter (mate.py:390-394); degree 1
+        # skips it — see step 2
+        if prefilter:
+            hits = hits.filter(
+                superkey_contains(
+                    F.col("__q_hi"), F.col("__q_lo"),
+                    F.col("super_key_hi"), F.col("super_key_lo"),
+                )
+            )
+
+        pairs = hits.select(
+            *keys,
+            "table_id",
+            F.col("row_id").alias("ext_row_id"),
+            F.col("col_id").alias("hit_col_id"),
+            "mate_row_id",
+            *[f"__q{i}" for i in range(degree)],
+        )
+
+        # 5. verification (mate.py:94-123 evaluate_rows, 443-455):
+        # every query column after the first must appear among the row's
+        # cells; matched col-ids are appended in ascending order.  (The
+        # degree-1 quirk — [-0:] slices the whole array, re-verifying the
+        # single query column — is served by the fast path above.)
+        verify_idx = list(range(1, degree))
+
+        # Only cells whose token equals SOME verify-column value can ever
+        # enter a collect_set below — semi-filter the lake by the distinct
+        # verify tokens BEFORE the (table_id, row_id) shuffle.  Catalyst
+        # cannot infer this (the membership test is inside an aggregate),
+        # and it typically drops the shuffled volume by the lake/input
+        # vocabulary ratio.  Pairs with no surviving cell row are correctly
+        # lost: they can never verify.  With keys the filter is the union
+        # of every query's tokens: a superset of each query's own filter,
+        # so the per-pair equality below is untouched and the lake is
+        # passed once for all queries.
+        verify_tokens = (
+            inp.select(
+                F.explode(F.array(*[F.col(f"__q{i}") for i in verify_idx])).alias(
+                    "__cell_tok"
+                )
+            ).distinct()
+        )
+        if small_input:
+            verify_tokens = F.broadcast(verify_tokens)
+        row_cells = cells.select(
+            "table_id",
+            F.col("row_id").alias("ext_row_id"),
+            F.col("col_id").alias("__cell_col"),
+            F.col("tokenized").alias("__cell_tok"),
+        ).join(verify_tokens, "__cell_tok", "leftsemi")
+        joined = pairs.join(row_cells, ["table_id", "ext_row_id"], "inner")
+
+        verified = joined.groupBy(
+            *keys, "table_id", "ext_row_id", "hit_col_id", "mate_row_id"
+        ).agg(*[
+            F.sort_array(
+                F.collect_set(
+                    F.when(F.col("__cell_tok") == F.col(f"__q{i}"), F.col("__cell_col"))
+                )
+            ).alias(f"__m{i}")
+            for i in verify_idx
+        ])
+
+        is_match = F.lit(True)
+        for i in verify_idx:
+            is_match = is_match & (F.size(F.col(f"__m{i}")) > 0)
+        verified = verified.withColumn("__match", is_match)
+
+        combo = F.concat_ws(
+            "_",
+            F.col("hit_col_id").cast("string"),
+            *[
+                F.array_join(F.transform(F.col(f"__m{i}"), lambda c: c.cast("string")), "_")
+                for i in verify_idx
+            ],
+        )
+        matches = verified.filter(F.col("__match")).withColumn("column_combination", combo)
+        return matches, pairs
+
+    def _best_per_table(self, matches: DataFrame, keys: list[str], k: int) -> DataFrame:
+        """6. scoring: count per (table, combination) (mate.py:457-470);
+        best combination per table; reported score = count - 1; top ``k``
+        tables — per ``keys`` group."""
+        combo_counts = matches.groupBy(*keys, "table_id", "column_combination").agg(
+            F.count(F.lit(1)).alias("__cnt")
+        )
+        best = (
+            combo_counts.withColumn(
+                "__rk",
+                F.row_number().over(
+                    Window.partitionBy(*keys, "table_id").orderBy(
+                        F.desc("__cnt"), F.asc("column_combination")
+                    )
+                ),
+            )
+            .filter(F.col("__rk") == 1)
+            .select(
+                *keys,
+                (F.col("__cnt") - 1).cast("long").alias("score"),
+                "table_id",
+                "column_combination",
+            )
+        )
+        return self._top_n(best, keys, [F.desc("score"), F.asc("table_id")], k)
+
     def join_search_batch(
         self,
         inputs: dict[str, tuple[DataFrame, list[str], list[str] | None]],
@@ -563,17 +583,21 @@ class MATE:
         Why batch: a discovery workload probes the SAME lake with
         hundreds of inputs.  Run serially, every query pays the index
         scan; batched, the union of prepared inputs (tagged by query_id)
-        broadcasts against ONE scan of the keyed cell view, and every
-        later stage is the single-query stage with query_id prepended to
-        its keys — per-query candidate caps and top-k become windows
-        PARTITIONED by query (distributed across queries, bounded per
-        query), verification shuffles once for the whole batch.  At a
-        1000-executor scale this turns N lake scans into one.
+        broadcasts against ONE scan of the keyed cell view.  The batch is
+        the keyed form of :meth:`join_search`'s own pipeline: the same
+        probe, candidate cap, verification and scoring, with
+        ``__query_id`` prepended to every grouping and join key — per-query
+        candidate caps and top-k become windows PARTITIONED by query
+        (distributed across queries, bounded per query), verification
+        shuffles once for the whole batch.  At a 1000-executor scale this
+        turns N lake scans into one.
 
         Batch inputs are broadcast unconditionally — the batch path is
         for many SMALL probes; a fact-table-sized input belongs on
         :meth:`join_search`'s salted non-broadcast path.
         """
+        if not inputs:
+            raise ValueError("empty batch: join_search_batch needs at least one query")
         degrees = {len(qc) for (_, qc, _) in inputs.values()}
         if len(degrees) != 1:
             raise ValueError(f"mixed query degrees in one batch: {degrees}")
@@ -586,188 +610,12 @@ class MATE:
                 df, qcols, order, with_super_key=prefilter
             ).withColumn("__query_id", F.lit(qid))
             prepared = p if prepared is None else prepared.unionByName(p)
-        prepared = F.broadcast(prepared)
 
-        probe_cells = self.index.keyed_cells() if prefilter else self.index.cells
-        hits = probe_cells.join(
-            prepared, probe_cells["tokenized"] == prepared["__q0"], "inner"
+        keys = ["__query_id"]
+        matches, _ = self._match(
+            F.broadcast(prepared), keys, degree, prefilter,
+            small_input=True, k_c=k_c, min_join_ratio=0,
         )
-
-        if degree == 1:
-            # Degree-1 fast path, the batch twin of join_search's (same
-            # equality argument with __query_id prepended to every key):
-            # the degree-1 quirk re-verifies the single query column, so a
-            # pair's matched-column set __m0 is exactly the hit cells of
-            # its (__query_id, ext_row, mate_row) triple — token equality
-            # is both the join condition and the verification predicate.
-            # One aggregate keyed per (query, row) replaces the generic
-            # path's second lake scan + pair-keyed verification shuffle;
-            # the grouping key contains the cache's (table_id, row_id)
-            # clustering, so the aggregate is exchange-free.
-            row_m = (
-                hits.select(
-                    "__query_id",
-                    "table_id",
-                    F.col("row_id").alias("ext_row_id"),
-                    "mate_row_id",
-                    "col_id",
-                )
-                .groupBy("__query_id", "table_id", "ext_row_id", "mate_row_id")
-                .agg(F.sort_array(F.collect_set("col_id")).alias("__m0"))
-                # cap job + pair job both consume it; left persisted for
-                # the returned DataFrame's lifetime (same trade-off as
-                # join_search's stats persists: the result is lazy, so
-                # there is no post-consumption hook to unpersist on —
-                # MEMORY_AND_DISK, evicted under pressure, dropped with
-                # the session)
-                .persist()
-            )
-            # per-query candidate cap on the SAME hit counts as the
-            # generic path: one hit row per (cell, input) match = the sum
-            # of per-row matched-column set sizes
-            table_hits = row_m.groupBy(
-                "__query_id", F.col("table_id").alias("__t")
-            ).agg(F.sum(F.size("__m0")).alias("count"))
-            cap_w = Window.partitionBy("__query_id").orderBy(
-                F.desc("count"), F.asc("__t")
-            )
-            cand = (
-                table_hits.withColumn("__rk", F.row_number().over(cap_w))
-                .filter(F.col("__rk") <= k_c)
-                .select("__query_id", F.col("__t").alias("table_id"))
-            )
-            capped = row_m.join(
-                F.broadcast(cand), ["__query_id", "table_id"], "inner"
-            )
-            combo = F.concat_ws(
-                "_",
-                F.col("hit_col_id").cast("string"),
-                F.array_join(
-                    F.transform(F.col("__m0"), lambda c: c.cast("string")), "_"
-                ),
-            )
-            # __m0 is non-empty by construction (it contains hit_col_id),
-            # so every pair verifies — same as the generic degree-1 path
-            matches = (
-                capped.select(
-                    "__query_id",
-                    "table_id",
-                    "ext_row_id",
-                    F.explode("__m0").alias("hit_col_id"),
-                    "mate_row_id",
-                    "__m0",
-                )
-                .withColumn("column_combination", combo)
-                .drop("__m0")
-            )
-        else:
-            # per-query candidate cap: the window partitions BY QUERY, so
-            # each query keeps its own top-k_c tables and no query's hot
-            # tables crowd out another's
-            table_hits = hits.groupBy(
-                "__query_id", F.col("table_id").alias("__t")
-            ).count()
-            cap_w = Window.partitionBy("__query_id").orderBy(
-                F.desc("count"), F.asc("__t")
-            )
-            cand = (
-                table_hits.withColumn("__rk", F.row_number().over(cap_w))
-                .filter(F.col("__rk") <= k_c)
-                .select("__query_id", F.col("__t").alias("table_id"))
-            )
-            hits = hits.join(F.broadcast(cand), ["__query_id", "table_id"], "inner")
-
-            if prefilter:
-                hits = hits.filter(
-                    superkey_contains(
-                        F.col("__q_hi"), F.col("__q_lo"),
-                        F.col("super_key_hi"), F.col("super_key_lo"),
-                    )
-                )
-
-            pairs = hits.select(
-                "__query_id",
-                "table_id",
-                F.col("row_id").alias("ext_row_id"),
-                F.col("col_id").alias("hit_col_id"),
-                "mate_row_id",
-                *[f"__q{i}" for i in range(degree)],
-            )
-
-            verify_idx = list(range(1, degree))
-            # one global verify-token semi-filter for the whole batch: a
-            # superset of each query's filter, so per-pair equality below is
-            # untouched — correctness per query, one lake pass for all
-            verify_tokens = F.broadcast(
-                prepared.select(
-                    F.explode(
-                        F.array(*[F.col(f"__q{i}") for i in verify_idx])
-                    ).alias("__cell_tok")
-                ).distinct()
-            )
-            row_cells = self.index.cells.select(
-                "table_id",
-                F.col("row_id").alias("ext_row_id"),
-                F.col("col_id").alias("__cell_col"),
-                F.col("tokenized").alias("__cell_tok"),
-            ).join(verify_tokens, "__cell_tok", "leftsemi")
-            joined = pairs.join(row_cells, ["table_id", "ext_row_id"], "inner")
-
-            agg_exprs = [
-                F.sort_array(
-                    F.collect_set(
-                        F.when(
-                            F.col("__cell_tok") == F.col(f"__q{i}"), F.col("__cell_col")
-                        )
-                    )
-                ).alias(f"__m{i}")
-                for i in verify_idx
-            ]
-            verified = joined.groupBy(
-                "__query_id", "table_id", "ext_row_id", "hit_col_id", "mate_row_id"
-            ).agg(*agg_exprs)
-
-            is_match = F.lit(True)
-            for i in verify_idx:
-                is_match = is_match & (F.size(F.col(f"__m{i}")) > 0)
-            combo = F.concat_ws(
-                "_",
-                F.col("hit_col_id").cast("string"),
-                *[
-                    F.array_join(
-                        F.transform(F.col(f"__m{i}"), lambda c: c.cast("string")), "_"
-                    )
-                    for i in verify_idx
-                ],
-            )
-            matches = verified.filter(is_match).withColumn("column_combination", combo)
-
-        combo_counts = matches.groupBy(
-            "__query_id", "table_id", "column_combination"
-        ).agg(F.count(F.lit(1)).alias("__cnt"))
-        best_w = Window.partitionBy("__query_id", "table_id").orderBy(
-            F.desc("__cnt"), F.asc("column_combination")
-        )
-        best = (
-            combo_counts.withColumn("__rk", F.row_number().over(best_w))
-            .filter(F.col("__rk") == 1)
-            .select(
-                "__query_id",
-                (F.col("__cnt") - 1).cast("long").alias("score"),
-                "table_id",
-                "column_combination",
-            )
-        )
-        topk_w = Window.partitionBy("__query_id").orderBy(
-            F.desc("score"), F.asc("table_id")
-        )
-        return (
-            best.withColumn("__rk", F.row_number().over(topk_w))
-            .filter(F.col("__rk") <= k)
-            .select(
-                F.col("__query_id").alias("query_id"),
-                "score",
-                "table_id",
-                "column_combination",
-            )
+        return self._best_per_table(matches, keys, k).withColumnRenamed(
+            "__query_id", "query_id"
         )

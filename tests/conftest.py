@@ -23,6 +23,11 @@ from datalake_indexes_spark.sources.catalog import LakeTableSpec  # noqa: E402
 @pytest.fixture(scope="session")
 def planted(spark):
     """Input dataset + mini-lake with known ground truth."""
+    return planted_lake(spark)
+
+
+def planted_lake(spark):
+    """Build the ``planted`` fixture outside pytest (``scripts/mate_plans.py``)."""
     n = 40
     # input: query columns (director, title), target correlated with plant
     input_rows = [

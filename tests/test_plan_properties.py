@@ -75,18 +75,22 @@ def test_mate_plan_has_no_nested_loop_join(planted):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
-def test_mate_candidate_cap_is_distributed_topk(planted):
+@pytest.mark.parametrize(
+    "query_columns", [["director_name"], ["director_name", "movie_title"]],
+    ids=["degree1", "degree2"],
+)
+def test_mate_candidate_cap_is_distributed_topk(planted, query_columns):
     """The k_c candidate cap must plan as TakeOrderedAndProject (each
     partition keeps a local top-k; only those merge) — an empty-partition
     row_number Window would pull every per-table hit count through a
-    single task at lake scale."""
+    single task at lake scale.  Degree 1 caps on its own fast path."""
     from datalake_indexes_spark.operators.mate import MATE
 
     res = MATE(planted["index"]).join_search(
         planted["input"],
-        ["director_name", "movie_title"],
+        query_columns,
         k=3,
-        input_order_by=["director_name", "movie_title"],
+        input_order_by=query_columns,
     )
     plan = _plan(res.top_k)
     assert "TakeOrderedAndProject" in plan
@@ -735,3 +739,23 @@ def test_mate_batch_degree1_skips_verification_scan(planted):
         {"q": (inp, ["director_name", "movie_title"], None)}, k=3
     )
     assert "__cell_tok" in _plan(d2)
+
+
+@pytest.mark.parametrize(
+    "query_columns", [["director_name"], ["director_name", "movie_title"]],
+    ids=["degree1", "degree2"],
+)
+def test_mate_batch_windows_are_partitioned_by_query(planted, query_columns):
+    """Every window of a batch (candidate cap, best combination, top-k)
+    must be partitioned by __query_id — a global one would rank all
+    queries' rows in one task."""
+    from datalake_indexes_spark.operators.mate import MATE
+    from datalake_indexes_spark.plans.audit import plan_report
+
+    inp = planted["input"]
+    batch = MATE(planted["index"]).join_search_batch(
+        {"a": (inp, query_columns, None), "b": (inp, query_columns[::-1], None)},
+        k=3,
+    )
+    rep = plan_report(batch)
+    assert rep["n_global_windows"] == 0, rep
