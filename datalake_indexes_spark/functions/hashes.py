@@ -19,6 +19,14 @@ machinery; provided families:
   OR-folding per-row gives a row Bloom filter; the containment test is the
   same bitwise subset check as XASH, so the MATE prefilter stays sound.
 
+The engine hashes with one function whatever the family: the index build,
+MATE's input prep and the folder ingest each resolve ``hash_function or
+partial(xash, hash_size=…, rotation=…, number_of_ones=…)`` once and hand it
+to the one memoized UDF kernel of functions/xash.py
+(:func:`~datalake_indexes_spark.functions.xash.hash_pandas_udf` and its row
+and fused tokenize+hash forms) — a custom family is tokenized, hashed and
+OR-folded exactly like XASH.
+
 At 100 TB, per-partition pruning with Spark's built-in
 ``DataFrame.stat.bloomFilter`` / runtime bloom-filter joins complements
 these per-row signatures; the per-row form is what the reference's
@@ -29,15 +37,8 @@ from __future__ import annotations
 
 import hashlib
 import math
-from collections.abc import Callable
 
-import pandas as pd
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType, StructField, StructType
-
-from datalake_indexes_spark.functions.xash import split128
-
-_MASK128 = (1 << 128) - 1
 
 
 def md5_bucket(col, modulus: int):
@@ -136,42 +137,3 @@ class BloomFilter:
 
     def check(self, item: str) -> bool:
         return all((self.bits >> p) & 1 for p in self._positions(item))
-
-
-_HASH_SCHEMA = StructType(
-    [StructField("hi", LongType(), False), StructField("lo", LongType(), False)]
-)
-
-HASH_FAMILIES: dict[str, Callable[[str], int]] = {
-    "md5": md5_128,
-    "simhash": simhash128,
-    "bloom": bloom128,
-}
-
-
-def hash_pandas_udf(fn: Callable[[str], int]):
-    """Wrap any ``str -> int128`` callable into an Arrow-batched pandas UDF
-    returning (hi, lo) longs — the generic form of the XASH UDF, used for
-    the reference's runtime hash_function swap."""
-    cache: dict[str, tuple[int, int]] = {}
-
-    @F.pandas_udf(_HASH_SCHEMA)
-    def _udf(tokens: pd.Series) -> pd.DataFrame:
-        # factorize + numpy take (see xash_pandas_udf): Python touches
-        # only the batch's new uniques, per-row expansion stays in C
-        import numpy as np
-
-        codes, uniques = pd.factorize(tokens.fillna(""))
-        hi = np.empty(len(uniques), dtype=np.int64)
-        lo = np.empty(len(uniques), dtype=np.int64)
-        for j, t in enumerate(uniques):
-            pair = cache.get(t)
-            if pair is None:
-                pair = split128(fn(t) & _MASK128)
-                if len(cache) < 4_000_000:
-                    cache[t] = pair
-            hi[j] = pair[0]
-            lo[j] = pair[1]
-        return pd.DataFrame({"hi": hi[codes], "lo": lo[codes]})
-
-    return _udf

@@ -12,7 +12,7 @@ Spark has no 128-bit integer, so the engine carries the hash as two signed
 (``maco/data_handler.py:280-303`` stores the same value as a BIT(128) string).
 
 The per-token computation is pure Python (it is not expressible as a native
-column expression), wrapped in an Arrow-batched pandas UDF with a per-worker
+column expression), wrapped in one Arrow-batched pandas UDF kernel with a
 memo cache — token distributions in a data lake are heavily repetitive, so
 the cache turns the UDF into a dictionary probe for the common case.
 """
@@ -20,6 +20,10 @@ the cache turns the UDF into a dictionary probe for the common case.
 from __future__ import annotations
 
 from collections import Counter
+from collections.abc import Callable
+from functools import partial, reduce
+from itertools import chain
+from operator import or_
 
 import pandas as pd
 from pyspark.sql import Column
@@ -90,160 +94,111 @@ def xash_hi_lo(token: str, **kwargs) -> tuple[int, int]:
     return split128(xash(token, **kwargs))
 
 
-_XASH_SCHEMA = StructType(
+_HASH_SCHEMA = StructType(
     [StructField("hi", LongType(), False), StructField("lo", LongType(), False)]
 )
+_TOK_HASH_SCHEMA = StructType([StructField("tok", StringType(), False), *_HASH_SCHEMA])
+_MEMO_MAX = 4_000_000  # bound worker memory on degenerate vocabularies
 
 
-def xash_pandas_udf(hash_size: int = 128, rotation: bool = True, number_of_ones: int = 5):
-    """Arrow-batched pandas UDF: token string -> struct(hi long, lo long).
+class _Memo(dict):
+    """``fn`` behind a dict memo: a hit is one C-level dict lookup, a miss
+    computes ``fn`` and keeps at most ``_MEMO_MAX`` keys.  The memo lives
+    in the UDF's closure, which PySpark unpickles per task: it spans the
+    Arrow batches of one task, not a worker's whole life."""
 
-    A per-worker memo cache amortizes repeated tokens (key/id columns in a
-    lake repeat across rows and tables).
-    """
-    cache: dict[str, tuple[int, int]] = {}
+    def __init__(self, fn: Callable[[str], object]):
+        super().__init__()
+        self.fn = fn
 
-    @F.pandas_udf(_XASH_SCHEMA)
-    def _udf(tokens: pd.Series) -> pd.DataFrame:
-        # factorize the batch (one C pass -> unique values + int codes),
-        # hash only the unseen uniques in Python, then expand per-row
-        # results with a numpy take — the per-ROW work is all C.  Lake
-        # token columns repeat heavily, so the Python-level work is
-        # O(new uniques), not O(rows).  Measured 3x over the previous
-        # dict-map + list-comprehension body (56s -> 19s CPU per 4.7M
-        # cells at sf0.1).
+    def __missing__(self, key: str):
+        got = self.fn(key)
+        if len(self) < _MEMO_MAX:
+            self[key] = got
+        return got
+
+
+def _hash_kernel(fn: Callable[[str], int], tokenize: bool):
+    """The one super-key hash UDF body: factorize the batch (one C pass ->
+    unique values + int codes), optionally tokenize the uniques, hash only
+    the unseen ones in Python through the memo, then expand per-row
+    results with a numpy take — per-ROW work is all C.  Lake token columns
+    repeat heavily, so the Python-level work is O(new uniques), not
+    O(rows).  Measured 3x over a dict-map + list-comprehension body (56s
+    -> 19s CPU per 4.7M cells at sf0.1)."""
+    pair = _Memo(lambda t: split128(fn(t)))
+
+    @F.pandas_udf(_TOK_HASH_SCHEMA if tokenize else _HASH_SCHEMA)
+    def _udf(values: pd.Series) -> pd.DataFrame:
         import numpy as np
 
-        codes, uniques = pd.factorize(tokens.fillna(""))
-        hi = np.empty(len(uniques), dtype=np.int64)
-        lo = np.empty(len(uniques), dtype=np.int64)
-        for j, t in enumerate(uniques):
-            got = cache.get(t)
-            if got is None:
-                got = split128(
-                    xash(t, hash_size=hash_size, rotation=rotation,
-                         number_of_ones=number_of_ones)
-                )
-                if len(cache) < 4_000_000:  # bound worker memory on
-                    cache[t] = got          # degenerate vocabularies
-            hi[j] = got[0]
-            lo[j] = got[1]
-        return pd.DataFrame({"hi": hi[codes], "lo": lo[codes]})
+        codes, uniques = pd.factorize(values.fillna(""))
+        out = {}
+        if tokenize:
+            import pyarrow as pa
+
+            from datalake_indexes_spark.functions.text import tokenize_arrow
+
+            uniques = out["tok"] = np.asarray(
+                tokenize_arrow(pa.array(uniques, type=pa.string())).to_pylist(),
+                dtype=object,
+            )
+        hl = np.fromiter(
+            chain.from_iterable(map(pair.__getitem__, uniques)), np.int64, 2 * len(uniques)
+        ).reshape(-1, 2)
+        out["hi"], out["lo"] = hl[:, 0], hl[:, 1]
+        return pd.DataFrame({k: v[codes] for k, v in out.items()})
 
     return _udf
 
 
-def row_xash_pandas_udf(hash_size: int = 128, rotation: bool = True,
-                        number_of_ones: int = 5, hash_fn=None):
+def hash_pandas_udf(fn: Callable[[str], int]):
+    """Arrow-batched pandas UDF: token string -> struct(hi long, lo long)
+    of any ``str -> int128`` callable (XASH or the reference's pluggable
+    ``hash_function``, data_handler.py:89,109), memoized per task — key
+    and id columns in a lake repeat across rows and tables."""
+    return _hash_kernel(fn, tokenize=False)
+
+
+def xash_pandas_udf(hash_size: int = 128, rotation: bool = True, number_of_ones: int = 5):
+    """:func:`hash_pandas_udf` of XASH."""
+    return hash_pandas_udf(
+        partial(xash, hash_size=hash_size, rotation=rotation, number_of_ones=number_of_ones)
+    )
+
+
+def row_hash_pandas_udf(fn: Callable[[str], int]):
     """Arrow-batched pandas UDF hashing a WHOLE ROW of tokens at once:
     input = tokens joined with ``\\x01`` (tokens are ASCII alnum+space so
     the separator cannot collide; NUL is avoided because Arrow-produced
     pandas strings hash C-string-style in ``Series.unique()`` here,
     silently collapsing keys at an embedded NUL), output = OR-fold of the
     per-token hashes as (hi, lo).  One Python crossing per row instead of
-    one per query column; the memo caches whole-row keys."""
-    fn = hash_fn or (
-        lambda t: xash(t, hash_size=hash_size, rotation=rotation,
-                       number_of_ones=number_of_ones)
-    )
-    cache: dict[str, tuple[int, int]] = {}
-    tok_cache: dict[str, int] = {}
-
-    def _tok_hash(t: str) -> int:
-        # token-level memo UNDER the row-level one: distinct rows share
-        # tokens heavily (a 600k-row composite-key probe has ~170k
-        # distinct tokens), so most per-row work is two dict hits even
-        # when every row key is unique
-        v = tok_cache.get(t)
-        if v is None:
-            v = fn(t)
-            if len(tok_cache) < 4_000_000:
-                tok_cache[t] = v
-        return v
-
-    @F.pandas_udf(_XASH_SCHEMA)
-    def _udf(rows: pd.Series) -> pd.DataFrame:
-        # same factorize + numpy-take shape as xash_pandas_udf: per-row
-        # work stays in C, Python touches only the batch's new uniques
-        import numpy as np
-
-        codes, uniques = pd.factorize(rows.fillna(""))
-        hi = np.empty(len(uniques), dtype=np.int64)
-        lo = np.empty(len(uniques), dtype=np.int64)
-        for j, joined in enumerate(uniques):
-            got = cache.get(joined)
-            if got is None:
-                acc = 0
-                for t in joined.split("\x01"):
-                    acc |= _tok_hash(t)
-                got = split128(acc & ((1 << 128) - 1))
-                if len(cache) < 4_000_000:  # bound worker memory
-                    cache[joined] = got
-            hi[j] = got[0]
-            lo[j] = got[1]
-        return pd.DataFrame({"hi": hi[codes], "lo": lo[codes]})
-
-    return _udf
+    one per query column; the kernel memoizes whole-row keys, and a token
+    memo sits under it: distinct rows share tokens heavily (a 600k-row
+    composite-key probe has ~170k distinct tokens), so most per-row work
+    is dict hits even when every row key is unique."""
+    tok = _Memo(fn)
+    return hash_pandas_udf(lambda row: reduce(or_, map(tok.__getitem__, row.split("\x01")), 0))
 
 
-_TOK_XASH_SCHEMA = StructType(
-    [
-        StructField("tok", StringType(), False),
-        StructField("hi", LongType(), False),
-        StructField("lo", LongType(), False),
-    ]
-)
-
-
-def tokenize_xash_pandas_udf(hash_size: int = 128, rotation: bool = True,
-                             number_of_ones: int = 5):
-    """Arrow-batched pandas UDF fusing tokenize + XASH: raw CAST-to-string
+def tokenize_hash_pandas_udf(fn: Callable[[str], int]):
+    """Arrow-batched pandas UDF fusing tokenize + hash: raw CAST-to-string
     cell -> struct(tok string, hi long, lo long).
 
-    The index build previously ran the 4-regex tokenizer chain in the JVM
-    over EVERY cell (no way to deduplicate inside codegen) and then paid a
-    second Arrow crossing to hash the tokenized strings.  Lake columns are
-    keys and enums — a batch's *unique* raw values are a small fraction of
-    its rows — so this fusion factorizes the raw batch once (C), tokenizes
-    only the uniques through the RE2-vectorized :func:`tokenize_arrow`
-    (bit-identical to ``tokenize_col``, see its parity note), XASHes only
-    the unique tokens (memoized), and expands both with numpy takes.  One
-    Python crossing per column instead of regex-per-cell + crossing.
+    Lake columns are keys and enums — a batch's *unique* raw values are a
+    small fraction of its rows — so the kernel tokenizes only the uniques
+    through the RE2-vectorized :func:`tokenize_arrow` (cell-exact with
+    ``tokenize_col``, see its parity note), hashes only the unique tokens
+    (memoized), and expands both with numpy takes: one Python crossing
+    per column instead of the JVM regex chain over every cell plus a
+    second crossing to hash its output.
 
     The cast to string MUST stay in the JVM (callers pass
     ``col.cast("string")``): Spark's cast formatting (e.g. ``1.0E7`` for
     doubles) is part of the indexed token contract and is not replicated
     here."""
-    cache: dict[str, tuple[int, int]] = {}
-
-    @F.pandas_udf(_TOK_XASH_SCHEMA)
-    def _udf(raw: pd.Series) -> pd.DataFrame:
-        import numpy as np
-        import pyarrow as pa
-
-        from datalake_indexes_spark.functions.text import tokenize_arrow
-
-        codes, uniques = pd.factorize(raw.fillna(""))
-        toks = np.asarray(
-            tokenize_arrow(pa.array(uniques, type=pa.string())).to_pylist(),
-            dtype=object,
-        )
-        hi = np.empty(len(uniques), dtype=np.int64)
-        lo = np.empty(len(uniques), dtype=np.int64)
-        for j, t in enumerate(toks):
-            got = cache.get(t)
-            if got is None:
-                got = split128(
-                    xash(t, hash_size=hash_size, rotation=rotation,
-                         number_of_ones=number_of_ones)
-                )
-                if len(cache) < 4_000_000:  # bound worker memory
-                    cache[t] = got
-            hi[j] = got[0]
-            lo[j] = got[1]
-        return pd.DataFrame({"tok": toks[codes], "hi": hi[codes], "lo": lo[codes]})
-
-    return _udf
+    return _hash_kernel(fn, tokenize=True)
 
 
 def superkey_contains(q_hi: Column, q_lo: Column, r_hi: Column, r_lo: Column) -> Column:

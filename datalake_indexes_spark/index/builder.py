@@ -13,12 +13,14 @@ projection or a small aggregate of it (:func:`index_members`).
 
 from __future__ import annotations
 
+from functools import partial, reduce
 from itertools import accumulate
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from datalake_indexes_spark.functions.text import tokenize_col
+from datalake_indexes_spark.functions.xash import tokenize_hash_pandas_udf, xash
 from datalake_indexes_spark.index.lake_index import LakeIndex
 from datalake_indexes_spark.session import local_frame
 from datalake_indexes_spark.sources.catalog import LakeTableSpec
@@ -103,17 +105,16 @@ def with_global_row_number(df: DataFrame, order_by: list[str], out_col: str = "r
     )
 
 
-def unpivot_to_cells(
-    df: DataFrame, spec: LakeTableSpec, hash_udf=None, tok_hash_udf=None
-) -> DataFrame:
+def unpivot_to_cells(df: DataFrame, spec: LakeTableSpec, tok_hash_udf=None) -> DataFrame:
     """P7 — wide→long: one output row per cell, tokenized (P1-P3).
 
-    Tokenization runs as native expressions *before* the stack so every
-    column stays inside whole-stage codegen.
+    Without ``tok_hash_udf`` tokenization runs as native expressions
+    *before* the stack so every column stays inside whole-stage codegen.
 
-    With ``hash_udf`` (a hash of the JVM tokens) or ``tok_hash_udf``
-    (fused tokenize+hash) the output additionally carries the per-ROW super
-    key (``super_key_hi``/``super_key_lo``) computed entirely inside the
+    With ``tok_hash_udf`` (fused tokenize+hash,
+    :func:`~datalake_indexes_spark.functions.xash.tokenize_hash_pandas_udf`)
+    the output additionally carries the per-ROW super key
+    (``super_key_hi``/``super_key_lo``) computed entirely inside the
     map stage: every cell of a physical row is produced by the same scan
     task (the stack is row-local), so the OR-fold over the row's cell
     hashes is a native column expression over the wide format — no
@@ -130,8 +131,13 @@ def unpivot_to_cells(
     else:
         wide = with_global_row_number(cols, list(spec.order_by))
     n = len(spec.cols)
-    hashes = []
-    if tok_hash_udf is not None:
+    keys = []
+    if tok_hash_udf is None:
+        toks = [f"__tok_{i}" for i in range(n)]
+        wide = wide.select(
+            "row_id", *[tokenize_col(F.col(c)).alias(t) for c, t in zip(spec.cols, toks)]
+        )
+    else:
         # fused tokenize+hash (guide §4.2): one Arrow crossing per column;
         # tokenization and hashing run only over each batch's unique raw
         # values inside the UDF.  The JVM keeps the cast (its string
@@ -142,23 +148,8 @@ def unpivot_to_cells(
             *[tok_hash_udf(F.col(c).cast("string")).alias(h) for c, h in zip(spec.cols, hashes)],
         )
         toks = [f"{h}.tok" for h in hashes]
-    else:
-        toks = [f"__tok_{i}" for i in range(n)]
-        wide = wide.select(
-            "row_id", *[tokenize_col(F.col(c)).alias(t) for c, t in zip(spec.cols, toks)]
-        )
-        if hash_udf is not None:
-            hashes = [f"__h_{i}" for i in range(n)]
-            wide = wide.select(
-                "row_id", *toks,
-                *[hash_udf(F.col(t)).alias(h) for t, h in zip(toks, hashes)],
-            )
-    keys = []
-    if hashes:
-        hi, lo = F.col(f"{hashes[0]}.hi"), F.col(f"{hashes[0]}.lo")
-        for h in hashes[1:]:
-            hi = hi.bitwiseOR(F.col(f"{h}.hi"))
-            lo = lo.bitwiseOR(F.col(f"{h}.lo"))
+        hi = reduce(Column.bitwiseOR, [F.col(f"{h}.hi") for h in hashes])
+        lo = reduce(Column.bitwiseOR, [F.col(f"{h}.lo") for h in hashes])
         wide = wide.withColumn("super_key_hi", hi).withColumn("super_key_lo", lo)
         keys = ["super_key_hi", "super_key_lo"]
     stack_args = ", ".join(f"{i}, {t}" for i, t in enumerate(toks))
@@ -184,10 +175,10 @@ def build_keyed_cells(
     """The denormalized keyed cell view (cells + per-row super key) built
     SHUFFLE-FREE: per-table wide-format hash + native OR-fold inside the
     scan stage (see :func:`unpivot_to_cells`), unioned across the lake.
-    XASH runs fused with tokenization (one Arrow crossing per column);
-    a custom ``hash_function`` hashes the JVM-tokenized cells instead.
-    With ``with_super_keys=False`` it is the plain JVM-tokenized cell
-    frame: no key columns and no Python UDF.
+    The hash — XASH, or a custom ``hash_function`` — runs fused with
+    tokenization (one Arrow crossing per column).  With
+    ``with_super_keys=False`` it is the plain JVM-tokenized cell frame: no
+    key columns and no Python UDF.
 
     Output partitioning is the scan partitioning — callers that want the
     (table_id, row_id)-clustered layout (exchange-free row joins against
@@ -195,18 +186,10 @@ def build_keyed_cells(
     "row_id")``, which replaces the old window shuffle 1:1 but drops the
     window's per-row sort+aggregate entirely.
     """
-    hash_udf = None
-    tok_hash_udf = None
-    if with_super_keys and hash_function is not None:
-        from datalake_indexes_spark.functions.hashes import hash_pandas_udf
-
-        hash_udf = hash_pandas_udf(hash_function)
-    elif with_super_keys:
-        from datalake_indexes_spark.functions.xash import tokenize_xash_pandas_udf
-
-        tok_hash_udf = tokenize_xash_pandas_udf(
-            hash_size=hash_size, rotation=rotation, number_of_ones=number_of_ones
-        )
+    fn = hash_function or partial(
+        xash, hash_size=hash_size, rotation=rotation, number_of_ones=number_of_ones
+    )
+    tok_hash_udf = tokenize_hash_pandas_udf(fn) if with_super_keys else None
     active = [(n, s) for n, s in specs.items() if n in tables]
     if not active:
         raise ValueError("build_index: no tables to index (empty lake)")
@@ -217,10 +200,7 @@ def build_keyed_cells(
     with ThreadPoolExecutor(max_workers=min(len(active), 8) or 1) as pool:
         parts = list(
             pool.map(
-                lambda ns: unpivot_to_cells(
-                    tables[ns[0]], ns[1], hash_udf=hash_udf,
-                    tok_hash_udf=tok_hash_udf,
-                ),
+                lambda ns: unpivot_to_cells(tables[ns[0]], ns[1], tok_hash_udf),
                 active,
             )
         )
@@ -338,8 +318,8 @@ def build_index(
 
     Mirrors ``DataHandler.update_index`` (data_handler.py:641-651) in one
     pass: the keyed cell frame (:func:`build_keyed_cells` — fused
-    tokenize+XASH per column, or ``hash_function`` over the JVM tokens,
-    and the per-row OR-fold of data_handler.py:280-283) is the single
+    tokenize+hash per column with XASH or ``hash_function``, and the
+    per-row OR-fold of data_handler.py:280-283) is the single
     lake-sized computation, and every member is derived from it
     (:func:`index_members`).  The index stays lazy; the frame is
     registered as the index's shared frame, so ``save``/

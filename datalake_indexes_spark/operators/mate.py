@@ -35,13 +35,14 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 from dataclasses import dataclass, field
+from functools import partial
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from datalake_indexes_spark.functions.text import null_canonicalize_col, tokenize_col
-from datalake_indexes_spark.functions.xash import superkey_contains, xash_pandas_udf
-from datalake_indexes_spark.index.builder import with_global_row_number
+from datalake_indexes_spark.functions.xash import row_hash_pandas_udf, superkey_contains, xash
+from datalake_indexes_spark.index.builder import token_stats_for, with_global_row_number
 from datalake_indexes_spark.index.lake_index import LakeIndex
 
 
@@ -120,21 +121,10 @@ class MATE:
         match the family the index's row_keys were built with.  Containment-
         monotone families (XASH, bloom128) keep the prefilter sound; for
         others pass ``use_hash_optimization=False`` to join_search."""
-        from datalake_indexes_spark.functions.xash import row_xash_pandas_udf
-
         self.index = index
-        if hash_function is not None:
-            from datalake_indexes_spark.functions.hashes import hash_pandas_udf
-
-            self._xash_udf = hash_pandas_udf(hash_function)
-            self._row_hash_udf = row_xash_pandas_udf(hash_fn=hash_function)
-        else:
-            self._xash_udf = xash_pandas_udf(
-                hash_size=hash_size, rotation=rotation, number_of_ones=number_of_ones
-            )
-            self._row_hash_udf = row_xash_pandas_udf(
-                hash_size=hash_size, rotation=rotation, number_of_ones=number_of_ones
-            )
+        self._row_hash_udf = row_hash_pandas_udf(hash_function or partial(
+            xash, hash_size=hash_size, rotation=rotation, number_of_ones=number_of_ones
+        ))
 
     # ------------------------------------------------------------------
     def _lake_hot_tokens(self, threshold: int, cap: int = 1024) -> list[str]:
@@ -157,14 +147,7 @@ class MATE:
             return [r["tokenized"] for r in rows]
         cached = getattr(self.index, "_hot_tokens", None)
         if cached is None or cached[0] != (threshold, cap):
-            rows = (
-                self.index.cells.groupBy("tokenized")
-                .agg(F.count(F.lit(1)).alias("cnt"))
-                .filter(F.col("cnt") >= threshold)
-                .orderBy(F.desc("cnt"), F.asc("tokenized"))
-                .limit(cap)
-                .collect()
-            )
+            rows = token_stats_for(self.index.cells, threshold, cap).collect()
             cached = ((threshold, cap), [r["tokenized"] for r in rows])
             self.index._hot_tokens = cached
         return cached[1]

@@ -18,8 +18,8 @@ from functools import partial
 
 from pyspark.sql import DataFrame
 
-from datalake_indexes_spark.functions.hashes import bloom128, hash_pandas_udf
-from datalake_indexes_spark.functions.xash import xash
+from datalake_indexes_spark.functions.hashes import bloom128
+from datalake_indexes_spark.functions.xash import hash_pandas_udf, xash
 from datalake_indexes_spark.index.builder import row_keys_for
 from datalake_indexes_spark.index.lake_index import LakeIndex
 from datalake_indexes_spark.operators.mate import MATE

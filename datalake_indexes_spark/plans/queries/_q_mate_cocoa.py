@@ -125,7 +125,8 @@ def q_mate_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J1 with the Bloom hash family (mate.py:66-92 hash_row_vals_bf /
     bloom_filter.py) — containment-monotone, so the prefilter stays on;
     verified results match XASH's (same oracle)."""
-    from datalake_indexes_spark.functions.hashes import bloom128, hash_pandas_udf
+    from datalake_indexes_spark.functions.hashes import bloom128
+    from datalake_indexes_spark.functions.xash import hash_pandas_udf
     from datalake_indexes_spark.index.builder import row_keys_for
     from datalake_indexes_spark.index.lake_index import LakeIndex
 

@@ -36,11 +36,13 @@ from __future__ import annotations
 
 import glob as _glob
 import os
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from datalake_indexes_spark.functions.text import tokenize_col
+from datalake_indexes_spark.functions.xash import hash_pandas_udf, xash
 from datalake_indexes_spark.index.builder import row_keys_for, with_global_row_number
 from datalake_indexes_spark.index.lake_index import LakeIndex
 
@@ -407,17 +409,9 @@ def assemble_index(
     )
 
     if with_super_keys:
-        if hash_function is not None:
-            from datalake_indexes_spark.functions.hashes import hash_pandas_udf
-
-            hash_udf = hash_pandas_udf(hash_function)
-        else:
-            from datalake_indexes_spark.functions.xash import xash_pandas_udf
-
-            hash_udf = xash_pandas_udf(
-                hash_size=hash_size, rotation=rotation, number_of_ones=number_of_ones
-            )
-        row_keys = row_keys_for(cells, hash_udf)
+        row_keys = row_keys_for(cells, hash_pandas_udf(hash_function or partial(
+            xash, hash_size=hash_size, rotation=rotation, number_of_ones=number_of_ones
+        )))
     else:
         row_keys = cells.groupBy("table_id", "row_id").agg(
             F.lit(0).cast("long").alias("super_key_hi"),

@@ -12,9 +12,9 @@ import pytest
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from datalake_indexes_spark.functions.hashes import bloom128, hash_pandas_udf
+from datalake_indexes_spark.functions.hashes import bloom128
 from datalake_indexes_spark.functions.text import tokenize_col
-from datalake_indexes_spark.functions.xash import xash_pandas_udf
+from datalake_indexes_spark.functions.xash import hash_pandas_udf, xash_pandas_udf
 from datalake_indexes_spark.index.builder import build_index, row_keys_for, unpivot_to_cells
 from datalake_indexes_spark.operators.cocoa import is_numeric_flags
 from datalake_indexes_spark.plans.runtime import sql_executions
@@ -141,18 +141,26 @@ def _ran(execution, kind: str) -> bool:
     return any(kind in name and rows for name, _, rows in execution["nodes"])
 
 
-def test_save_scans_the_lake_in_one_execution(spark, lake, tmp_path):
+@pytest.mark.parametrize(
+    "kwargs", [{}, {"hash_function": bloom128}], ids=["xash", "hash_function"]
+)
+def test_save_scans_the_lake_in_one_execution(spark, lake, tmp_path, kwargs):
     """One save() runs one SQL execution per member; the lake parquet is
     read (a scan node with rows) by exactly one of them, and the others
-    run no Python UDF — they read the shared keyed frame."""
+    run no Python UDF — they read the shared keyed frame.  A custom
+    ``hash_function`` takes the same fused path as XASH: the cells are
+    tokenized inside the hash UDF, so the JVM tokenizer's regexes never
+    run over them."""
     tables, specs = lake
-    idx = build_index(spark, tables, specs)
+    idx = build_index(spark, tables, specs, **kwargs)
     before = max((e["id"] for e in sql_executions(spark)), default=-1)
     idx.save(str(tmp_path / "idx"))
     execs = sql_executions(spark, before)
     assert len(execs) == len(MEMBERS)
     assert [_ran(e, "Scan parquet") for e in execs] == [True] + [False] * 4
+    assert _ran(execs[0], "EvalPython")
     assert not any(_ran(e, "EvalPython") for e in execs[1:])
+    assert not any("regexp_replace" in desc for _, desc, _ in execs[0]["nodes"])
 
 
 def test_no_keys_build_runs_no_python(spark, lake, tmp_path):

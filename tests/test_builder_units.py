@@ -4,6 +4,10 @@ tokenize+hash unpivot."""
 
 from __future__ import annotations
 
+import pytest
+
+from datalake_indexes_spark.functions.hashes import bloom128
+from datalake_indexes_spark.functions.xash import xash
 from datalake_indexes_spark.index.builder import with_global_row_number
 
 
@@ -103,18 +107,15 @@ def test_sql_view_surface(spark):
     assert sql_keys == idx.row_keys.count() == 3
 
 
-def test_fused_tokenize_hash_matches_unfused(spark):
-    """The fused tokenize+XASH Arrow UDF path produces bit-identical keyed
-    cells (tokens AND super keys) to the legacy tokenize-in-JVM +
-    hash-UDF path, across mixed types, nulls, floats (JVM cast
-    formatting), unicode and >200-char strings."""
-    from pyspark.sql import functions as F
-
-    from datalake_indexes_spark.functions.xash import (
-        tokenize_xash_pandas_udf,
-        xash_pandas_udf,
-    )
-    from datalake_indexes_spark.index.builder import unpivot_to_cells
+@pytest.mark.parametrize("fn", [xash, bloom128], ids=["xash", "bloom128"])
+def test_fused_tokenize_hash_matches_unfused(spark, fn):
+    """The fused tokenize+hash Arrow UDF path produces bit-identical keyed
+    cells (tokens AND super keys) to the unfused composition — JVM
+    ``tokenize_col`` + stack, then a ``hash_pandas_udf`` OR-fold per row
+    — across mixed types, nulls, floats (JVM cast formatting), unicode
+    and >200-char strings, for XASH and a custom hash family."""
+    from datalake_indexes_spark.functions.xash import hash_pandas_udf, tokenize_hash_pandas_udf
+    from datalake_indexes_spark.index.builder import row_keys_for, unpivot_to_cells
     from datalake_indexes_spark.sources.catalog import LakeTableSpec
 
     rows = [
@@ -127,12 +128,14 @@ def test_fused_tokenize_hash_matches_unfused(spark):
     df = spark.createDataFrame(rows, "rid int, s string, d double, t string")
     spec = LakeTableSpec("fuz", 7, ("s", "d", "t"), ("rid",), "rid")
 
-    fused = unpivot_to_cells(df, spec, tok_hash_udf=tokenize_xash_pandas_udf())
-    legacy = unpivot_to_cells(df, spec, hash_udf=xash_pandas_udf())
+    fused = unpivot_to_cells(df, spec, tokenize_hash_pandas_udf(fn))
+    cells = unpivot_to_cells(df, spec)
+    unfused = cells.join(row_keys_for(cells, hash_pandas_udf(fn)), ["table_id", "row_id"])
     key = ["table_id", "col_id", "row_id"]
     a = {tuple(r[k] for k in key): (r["tokenized"], r["super_key_hi"], r["super_key_lo"])
          for r in fused.collect()}
     b = {tuple(r[k] for k in key): (r["tokenized"], r["super_key_hi"], r["super_key_lo"])
-         for r in legacy.collect()}
+         for r in unfused.collect()}
     assert a == b
     assert len(a) == len(rows) * 3
+    assert len({v[1:] for v in a.values()}) == len(rows)  # real, distinct row keys
