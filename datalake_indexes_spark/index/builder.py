@@ -41,7 +41,8 @@ def with_global_row_number(df: DataFrame, order_by: list[str], out_col: str = "r
     Bucket skew only affects parallelism, never the assigned numbers.
 
     Non-numeric leading keys fall back to sampled range partitioning, where
-    the cache + offset collect is what pins the sampled assignment.
+    a local checkpoint + offset collect is what pins the sampled
+    assignment (released with the frame, unlike a cache).
     """
     n_part = max(df.sparkSession.sparkContext.defaultParallelism, 1)
     first = order_by[0]
@@ -88,7 +89,7 @@ def with_global_row_number(df: DataFrame, order_by: list[str], out_col: str = "r
     )
     # repartitionByRange samples its boundaries; pin the partitioning so the
     # offsets computed below and the final join see the same assignment
-    ranged = ranged.cache()
+    ranged = ranged.localCheckpoint(eager=False)
     counts = (
         ranged.groupBy("__pid").count().orderBy("__pid").collect()
     )

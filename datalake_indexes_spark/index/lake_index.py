@@ -1,16 +1,21 @@
 """LakeIndex — the engine's index tables as DataFrames.
 
-Replaces the reference's four PostgreSQL tables (``maco/data_handler.py:33-54``):
+Replaces the reference's PostgreSQL tables (``maco/data_handler.py:33-54``)
+with six persisted members (``LakeIndex._MEMBERS``):
 
 - ``cells``          (table_id int, col_id int, row_id long, tokenized string)
 - ``row_keys``       (table_id int, row_id long, super_key_hi long, super_key_lo long)
 - ``column_headers`` (table_id int, col_id int, header string, header_tokenized string)
 - ``table_info``     (table_id int, dataset_name string, max_row_id long, max_col_id int)
+- ``col_flags``      optional — per-column numeric-ness (data_handler.py:50 is_numeric)
+- ``token_stats``    optional — (tokenized, cnt) of the hottest posting lists
 
 The reference denormalizes the 128-bit super key onto every cell row
 (data_handler.py:296-303); we keep it normalized per row in ``row_keys`` —
 cells stay narrow for scan speed and the key joins back on (table_id, row_id)
-when MATE needs it.
+when MATE needs it.  The denormalized ``cells_keyed`` view is an in-memory
+extra only: it is cached, released and viewed with the index but never
+persisted.
 
 Physical layout for scale (see ``save``): ``cells`` is written partitioned by
 ``table_id`` and sorted by ``tokenized`` within each partition, so (a)
@@ -22,8 +27,9 @@ two B-trees (data_handler.py:205-230).
 from __future__ import annotations
 
 import os
+import shutil
 from contextlib import contextmanager
-from dataclasses import dataclass
+from dataclasses import MISSING, dataclass, fields
 
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
@@ -35,8 +41,6 @@ def _stage_swap(df: DataFrame, mpath: str) -> None:
     the plan, which may read the old files), rename the old dir aside,
     publish, drop the backup — the same rename-aside discipline the
     streaming sink's migrate_legacy uses, so no crash point loses data."""
-    import shutil
-
     tmp, backup = mpath + ".__upserting", mpath + ".__old"
     for stale in (tmp, backup):
         if os.path.exists(stale):
@@ -72,6 +76,21 @@ class LakeIndex:
     # left it lazy (build_index); not a field — set by the builder, held by
     # the writers (_shared_held) and released by uncache()
     _shared_keyed = None
+    # frames a builder persisted on the way to the members (folder ingest,
+    # the testdata index); not a field — released by uncache()
+    _staging_frames = ()
+
+    # the persisted members, in write order — the one list every writer,
+    # loader, cache and view iterates.  The first two are the row members
+    # (partitioned by table_id on disk); a member whose dataclass default
+    # is None is optional.  cells_keyed is in-memory only.
+    _MEMBERS = (
+        "cells", "row_keys", "column_headers", "table_info", "col_flags",
+        "token_stats",
+    )
+    _ROW_MEMBERS = _MEMBERS[:2]
+    _CURRENT = "_CURRENT"
+    _VERSIONS = "_versions"
 
     @contextmanager
     def _shared_held(self):
@@ -89,35 +108,25 @@ class LakeIndex:
             if held:
                 df.unpersist()
 
+    def _frames(self) -> dict[str, DataFrame]:
+        """The members that are set, by name, plus the in-memory
+        ``cells_keyed`` view when present."""
+        return {
+            name: df
+            for name in (*self._MEMBERS, "cells_keyed")
+            if (df := getattr(self, name)) is not None
+        }
+
     def cache(self) -> "LakeIndex":
-        self.cells = self.cells.cache()
-        self.row_keys = self.row_keys.cache()
-        self.column_headers = self.column_headers.cache()
-        self.table_info = self.table_info.cache()
-        if self.col_flags is not None:
-            self.col_flags = self.col_flags.cache()
-        if self.cells_keyed is not None:
-            self.cells_keyed = self.cells_keyed.cache()
-        if self.token_stats is not None:
-            self.token_stats = self.token_stats.cache()
+        for name, df in self._frames().items():
+            setattr(self, name, df.cache())
         return self
 
     def uncache(self) -> "LakeIndex":
-        """Release every persisted member plus the frames a builder
-        registered (``_shared_keyed``, ``_staging_frames``) — unpersist is
-        a no-op on frames that were never cached, so this is always safe
-        to call."""
-        for df in (
-            self.cells,
-            self.row_keys,
-            self.column_headers,
-            self.table_info,
-            self.col_flags,
-            self.cells_keyed,
-            self.token_stats,
-            self._shared_keyed,
-            *getattr(self, "_staging_frames", []),
-        ):
+        """Release every member plus the frames a builder registered
+        (``_shared_keyed``, ``_staging_frames``) — unpersist is a no-op on
+        frames that were never cached, so this is always safe to call."""
+        for df in (*self._frames().values(), self._shared_keyed, *self._staging_frames):
             if df is not None:
                 df.unpersist()
         return self
@@ -166,13 +175,6 @@ class LakeIndex:
             return self.cells_keyed
         return self.cells.join(self.row_keys, ["table_id", "row_id"])
 
-    _MEMBERS = (
-        "cells", "row_keys", "column_headers", "table_info", "col_flags",
-        "token_stats",
-    )
-    _CURRENT = "_CURRENT"
-    _VERSIONS = "_versions"
-
     def _write_row_members(self, root: str, mode: str, **options) -> None:
         """``cells`` (sorted by token within each table partition) and
         ``row_keys``, both partitioned by ``table_id``."""
@@ -185,12 +187,10 @@ class LakeIndex:
     def _write_members(self, root: str, mode: str = "overwrite") -> None:
         with self._shared_held():
             self._write_row_members(root, mode)
-            self.column_headers.write.mode(mode).parquet(os.path.join(root, "column_headers"))
-            self.table_info.write.mode(mode).parquet(os.path.join(root, "table_info"))
-            if self.col_flags is not None:
-                self.col_flags.write.mode(mode).parquet(os.path.join(root, "col_flags"))
-            if self.token_stats is not None:
-                self.token_stats.write.mode(mode).parquet(os.path.join(root, "token_stats"))
+            for name in self._MEMBERS:
+                df = getattr(self, name)
+                if name not in self._ROW_MEMBERS and df is not None:
+                    df.write.mode(mode).parquet(os.path.join(root, name))
 
     def save(self, path: str, mode: str = "overwrite") -> None:
         """Materialize the index (S7/S8 — replaces COPY + B-tree builds).
@@ -217,40 +217,83 @@ class LakeIndex:
           per query and shuffling kilobytes.
         - ``row_keys`` bucketed by ``(table_id, row_id)`` for the row
           verification join, same reasoning.
+        - every other member that is set: one plain catalog table each.
 
         ``bucketBy`` requires the table catalog (``saveAsTable``) — plain
         path writes cannot carry bucket metadata; pass ``path`` to pin the
         files to an external location.  Load with :meth:`load_bucketed`.
         """
         spark = self.cells.sparkSession
-
-        def _write(df: DataFrame, name: str, bucket_cols: list[str]) -> None:
-            spark.sql(f"DROP TABLE IF EXISTS {table_prefix}_{name}")
-            writer = (
-                df.write.mode("overwrite")
-                .format("parquet")
-                .bucketBy(n_buckets, *bucket_cols)
-                .sortBy(*bucket_cols)
-            )
-            if path is not None:
-                writer = writer.option("path", os.path.join(path, name))
-            writer.saveAsTable(f"{table_prefix}_{name}")
-
+        bucket_cols = {"cells": ["tokenized"], "row_keys": ["table_id", "row_id"]}
         with self._shared_held():
-            _write(self.cells, "cells", ["tokenized"])
-            _write(self.row_keys, "row_keys", ["table_id", "row_id"])
-            for name, df in (
-                ("column_headers", self.column_headers),
-                ("table_info", self.table_info),
-                ("col_flags", self.col_flags),
-            ):
+            for name in self._MEMBERS:
+                df = getattr(self, name)
                 if df is None:
                     continue
                 spark.sql(f"DROP TABLE IF EXISTS {table_prefix}_{name}")
                 writer = df.write.mode("overwrite").format("parquet")
+                if name in bucket_cols:
+                    cols = bucket_cols[name]
+                    writer = writer.bucketBy(n_buckets, *cols).sortBy(*cols)
                 if path is not None:
                     writer = writer.option("path", os.path.join(path, name))
                 writer.saveAsTable(f"{table_prefix}_{name}")
+
+    @classmethod
+    def _replace_tables(
+        cls, spark: SparkSession, path: str, ids: list[int], delta: "LakeIndex | None" = None
+    ) -> None:
+        """The one MERGE of a :meth:`save` layout: the tables ``ids`` are
+        replaced by ``delta``'s rows, or dropped when there is no delta.
+
+        - ``token_stats`` (when saved): its tracked counts move by one
+          signed count per token — −1 per cell of the replaced partitions
+          (read via partition pruning), +1 per delta cell.  Runs first: it
+          reads the partitions the row write below replaces.  Tokens that
+          become hot only through a delta are not discovered (the stats
+          are a truncated top-N); a rebuild rehydrates them.
+        - row members: Spark dynamic partition overwrite
+          (``partitionOverwriteMode=dynamic`` as a per-write option, no
+          session conf mutation) replaces exactly the delta's partitions,
+          keeping the save layout; with no delta the partition
+          directories are removed outright.
+        - per-table metadata members: the old rows without ``ids`` plus
+          the delta's, published by :func:`_stage_swap` so a crash never
+          leaves a half-merged member.  A member the layout or the delta
+          lacks is left untouched.
+        """
+        stats_path = os.path.join(path, "token_stats")
+        if os.path.isdir(stats_path):
+            replaced = spark.read.parquet(os.path.join(path, "cells")).filter(
+                F.col("table_id").isin(ids)
+            )
+            signed = replaced.select("tokenized", F.lit(-1).alias("__d"))
+            if delta is not None:
+                signed = signed.unionByName(delta.cells.select("tokenized", F.lit(1).alias("__d")))
+            change = signed.groupBy("tokenized").agg(F.sum("__d").alias("__d"))
+            new_stats = (
+                spark.read.parquet(stats_path)
+                .join(change, "tokenized", "left")
+                .select("tokenized", (F.col("cnt") + F.coalesce("__d", F.lit(0))).alias("cnt"))
+                .filter(F.col("cnt") > 0)
+            )
+            _stage_swap(new_stats, stats_path)
+
+        if delta is not None:
+            delta._write_row_members(path, "overwrite", partitionOverwriteMode="dynamic")
+        else:
+            for name in cls._ROW_MEMBERS:
+                for tid in ids:
+                    shutil.rmtree(os.path.join(path, name, f"table_id={tid}"), ignore_errors=True)
+
+        for name in cls._MEMBERS:
+            mpath = os.path.join(path, name)
+            new = None if delta is None else getattr(delta, name)
+            merged_above = name in cls._ROW_MEMBERS or mpath == stats_path
+            if merged_above or not os.path.isdir(mpath) or (delta is not None and new is None):
+                continue
+            kept = spark.read.parquet(mpath).filter(~F.col("table_id").isin(ids))
+            _stage_swap(kept if new is None else kept.unionByName(new.select(*kept.columns)), mpath)
 
     def upsert_into(self, path: str) -> list[int]:
         """Partition-level MERGE of this (delta) index into a
@@ -264,26 +307,9 @@ class LakeIndex:
         rewrite.  At 100 TB the distinction is the whole game — a daily
         1% table churn becomes 1% of the write volume.
 
-        Mechanics:
-        - ``cells`` / ``row_keys``: Spark dynamic partition overwrite
-          (``partitionOverwriteMode=dynamic`` as a per-write option, no
-          session-level conf mutation) — the writer only replaces
-          partitions it produces, which is exactly the delta's table set.
-          Layout contract (partition by table_id, sort by tokenized
-          within) is preserved.
-        - per-table metadata (``column_headers``/``table_info``/
-          ``col_flags``): anti-join the delta's table ids out of the old
-          rows, union the delta's, stage-and-swap (write to a staging
-          dir, rename old aside, publish — the crash pattern the
-          streaming sink uses, so a crash never leaves a half-merged
-          member).
-        - ``token_stats`` (when present): maintained INCREMENTALLY for
-          its tracked tokens — subtract the replaced partitions' token
-          counts (read via partition pruning: only the delta's old
-          partitions are scanned), add the delta's.  Tokens that became
-          hot only through the delta are not discovered (top-N stats are
-          truncated); periodic rebuild rehydrates them — documented
-          approximation, bounded-work update.
+        One merge, two entry points: this and :meth:`delete_tables` both
+        run :meth:`_replace_tables` (here with this index as the delta),
+        which documents the per-member mechanics.
         """
         if self.current_version(path) is not None:
             raise ValueError(
@@ -291,51 +317,9 @@ class LakeIndex:
                 "indexes take whole snapshots via save_version()"
             )
         with self._shared_held():
-            spark = self.cells.sparkSession
             ids = [r.table_id for r in self.table_info.select("table_id").distinct().collect()]
-            if not ids:
-                return []
-
-            # token_stats maintenance FIRST — it reads the partitions the
-            # cells overwrite below replaces
-            stats_path = os.path.join(path, "token_stats")
-            new_stats = None
-            if os.path.isdir(stats_path):
-                old_part = spark.read.parquet(os.path.join(path, "cells")).filter(
-                    F.col("table_id").isin(ids)
-                )
-                minus = old_part.groupBy("tokenized").agg(F.count(F.lit(1)).alias("__minus"))
-                plus = self.cells.groupBy("tokenized").agg(F.count(F.lit(1)).alias("__plus"))
-                stats = spark.read.parquet(stats_path)
-                new_stats = (
-                    stats.join(minus, "tokenized", "left")
-                    .join(plus, "tokenized", "left")
-                    .select(
-                        "tokenized",
-                        (
-                            F.col("cnt")
-                            - F.coalesce("__minus", F.lit(0))
-                            + F.coalesce("__plus", F.lit(0))
-                        ).alias("cnt"),
-                    )
-                    .filter(F.col("cnt") > 0)
-                )
-
-            if new_stats is not None:
-                _stage_swap(new_stats, stats_path)
-
-            self._write_row_members(path, "overwrite", partitionOverwriteMode="dynamic")
-
-            for member, delta in (
-                ("column_headers", self.column_headers),
-                ("table_info", self.table_info),
-                ("col_flags", self.col_flags),
-            ):
-                mpath = os.path.join(path, member)
-                if delta is None or not os.path.isdir(mpath):
-                    continue
-                old = spark.read.parquet(mpath).filter(~F.col("table_id").isin(ids))
-                _stage_swap(old.unionByName(delta.select(*old.columns)), mpath)
+            if ids:
+                self._replace_tables(self.cells.sparkSession, path, ids, self)
             return ids
 
     @classmethod
@@ -343,61 +327,23 @@ class LakeIndex:
         """The DELETE half of the MERGE surface: drop the given tables
         from a :meth:`save` layout — partition directories removed
         outright (no rewrite of surviving data), metadata members
-        filtered via stage-and-swap, tracked token counts decremented."""
-        import shutil
-
+        filtered via stage-and-swap, tracked token counts decremented.
+        The same merge as :meth:`upsert_into`, with no delta."""
         if cls.current_version(path) is not None:
             raise ValueError("delete_tables targets the direct save() layout")
-        if not ids:
-            return
-
-        stats_path = os.path.join(path, "token_stats")
-        if os.path.isdir(stats_path):
-            gone = spark.read.parquet(os.path.join(path, "cells")).filter(
-                F.col("table_id").isin(ids)
-            )
-            minus = gone.groupBy("tokenized").agg(F.count(F.lit(1)).alias("__minus"))
-            stats = spark.read.parquet(stats_path)
-            new_stats = (
-                stats.join(minus, "tokenized", "left")
-                .select(
-                    "tokenized",
-                    (F.col("cnt") - F.coalesce("__minus", F.lit(0))).alias("cnt"),
-                )
-                .filter(F.col("cnt") > 0)
-            )
-            _stage_swap(new_stats, stats_path)
-
-        for member in ("cells", "row_keys"):
-            for tid in ids:
-                shutil.rmtree(
-                    os.path.join(path, member, f"table_id={tid}"), ignore_errors=True
-                )
-        for member in ("column_headers", "table_info", "col_flags"):
-            mpath = os.path.join(path, member)
-            if not os.path.isdir(mpath):
-                continue
-            kept = spark.read.parquet(mpath).filter(~F.col("table_id").isin(ids))
-            _stage_swap(kept, mpath)
+        if ids:
+            cls._replace_tables(spark, path, ids)
 
     @classmethod
     def load_bucketed(cls, spark: SparkSession, table_prefix: str) -> "LakeIndex":
         """Open a :meth:`save_bucketed` index — members come from the table
         catalog so joins see the bucket metadata (``spark.read.parquet`` on
         the same files would silently lose it)."""
-        def _table(name: str) -> DataFrame | None:
-            full = f"{table_prefix}_{name}"
-            if not spark.catalog.tableExists(full):
-                return None
-            return spark.table(full)
-
-        return cls(
-            cells=_table("cells"),
-            row_keys=_table("row_keys"),
-            column_headers=_table("column_headers"),
-            table_info=_table("table_info"),
-            col_flags=_table("col_flags"),
-        )
+        tables = {name: f"{table_prefix}_{name}" for name in cls._MEMBERS}
+        return cls(**{
+            name: spark.table(t) if spark.catalog.tableExists(t) else None
+            for name, t in tables.items()
+        })
 
     # ------------------------------------------------------------------
     # Transactional snapshot sink: full rewrites land in a fresh
@@ -524,8 +470,6 @@ class LakeIndex:
     def vacuum(cls, path: str, keep: int = 1) -> list[int]:
         """Drop all but the newest ``keep`` committed versions (never the
         current one).  Returns the removed version numbers."""
-        import shutil
-
         current = cls.current_version(path)
         vdir = os.path.join(path, cls._VERSIONS)
         if current is None or not os.path.isdir(vdir):
@@ -550,19 +494,15 @@ class LakeIndex:
         current = cls.current_version(path)
         if version is not None or current is not None:
             path = os.path.join(path, cls._VERSIONS, f"v{version if version is not None else current}")
-        flags_path = os.path.join(path, "col_flags")
-        stats_path = os.path.join(path, "token_stats")
-        return cls(
-            cells=spark.read.parquet(os.path.join(path, "cells")),
-            row_keys=spark.read.parquet(os.path.join(path, "row_keys")),
-            column_headers=spark.read.parquet(os.path.join(path, "column_headers")),
-            table_info=spark.read.parquet(os.path.join(path, "table_info")),
-            col_flags=spark.read.parquet(flags_path) if os.path.isdir(flags_path) else None,
-            token_stats=spark.read.parquet(stats_path) if os.path.isdir(stats_path) else None,
-        )
+        # a required member (no dataclass default) is read even when its
+        # directory is missing, so a broken layout fails here
+        required = {f.name for f in fields(cls) if f.default is MISSING}
+        return cls(**{
+            name: spark.read.parquet(os.path.join(path, name))
+            for name in cls._MEMBERS
+            if name in required or os.path.isdir(os.path.join(path, name))
+        })
 
     def drop(self, path: str) -> None:
         """S9 — index teardown."""
-        import shutil
-
         shutil.rmtree(path, ignore_errors=True)

@@ -29,14 +29,10 @@ from datalake_indexes_spark.session import local_frame
 
 
 def row_fingerprints(index: LakeIndex) -> DataFrame:
-    """Per-row fingerprint: sorted value multiset + super key + column count
+    """Per-row fingerprint: sorted value multiset + super key
     (duplicate_detection.py:70: ``sorted(list(row.astype(str)))``)."""
-    values = (
-        index.cells.groupBy("table_id", "row_id")
-        .agg(
-            F.sort_array(F.collect_list("tokenized")).alias("row_values"),
-            F.count(F.lit(1)).alias("n_cols"),
-        )
+    values = index.cells.groupBy("table_id", "row_id").agg(
+        F.sort_array(F.collect_list("tokenized")).alias("row_values")
     )
     return values.join(index.row_keys, ["table_id", "row_id"], "inner")
 

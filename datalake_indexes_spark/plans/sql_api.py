@@ -2,10 +2,11 @@
 queryable from ``spark.sql`` (the Spark-native equivalent of the
 reference's "connect psql and query the index tables" workflow).
 
-Every member becomes ``<prefix>_<member>``; the denormalized keyed view is
-registered too when present.  Views are lazy — registering costs nothing
-and every SQL query over them goes through the same Catalyst plans the
-DataFrame API produces (pushdown/pruning included, PLANS.md §1-2).
+Every member that is set becomes ``<prefix>_<member>``; the denormalized
+keyed view is registered too when present.  Views are lazy — registering
+costs nothing and every SQL query over them goes through the same
+Catalyst plans the DataFrame API produces (pushdown/pruning included,
+PLANS.md §1-2).
 """
 
 from __future__ import annotations
@@ -19,20 +20,8 @@ def register_index_views(
     spark: SparkSession, index: LakeIndex, prefix: str = "lake"
 ) -> list[str]:
     """Register the index members as temp views; returns the view names."""
-    members = {
-        "cells": index.cells,
-        "row_keys": index.row_keys,
-        "column_headers": index.column_headers,
-        "table_info": index.table_info,
-    }
-    if index.col_flags is not None:
-        members["col_flags"] = index.col_flags
-    if index.token_stats is not None:
-        members["token_stats"] = index.token_stats
-    if index.cells_keyed is not None:
-        members["cells_keyed"] = index.cells_keyed
     names = []
-    for name, df in members.items():
+    for name, df in index._frames().items():
         view = f"{prefix}_{name}"
         df.createOrReplaceTempView(view)
         names.append(view)

@@ -433,11 +433,6 @@ def assemble_index(
     return idx
 
 
-# backwards-compatible alias (parquet was the first typed format supported)
-def parquet_cells_raw(spark, pattern, cols=None, order_by=None):
-    return typed_glob_cells(spark, pattern, "parquet", cols=cols, order_by=order_by)
-
-
 def build_index_from_folder(
     spark: SparkSession,
     folder: str,

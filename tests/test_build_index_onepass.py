@@ -185,7 +185,9 @@ def test_save_and_uncache_release_the_build(spark, lake, tmp_path):
     """The writer holds the keyed frame only while it writes; the lazy
     index still recomputes after the release, and uncache() releases
     whatever cache() added.  (The string-key table is left out: its
-    sampled-range numbering pins its own partitioning with a cache.)"""
+    sampled-range numbering pins its own partitioning with a local
+    checkpoint, whose blocks count as persisted until the frame is
+    garbage-collected.)"""
     tables, specs = lake
     part = {n: specs[n] for n in ("dense", "ordered")}
     baseline = _persisted(spark)

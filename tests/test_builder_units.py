@@ -50,6 +50,20 @@ def test_string_key_falls_back_to_sampled_range(spark):
     assert got == {"apple": 0, "fig": 1, "pear": 2, "zoo": 3}
 
 
+def test_sampled_range_numbering_caches_nothing(spark):
+    """The sampled-range fallback pins its partitioning with a local
+    checkpoint, which goes with the frame — no cache-manager entry is left
+    behind (a ``.cache()`` there is one nothing ever releases)."""
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
+    was_empty = cache_manager.isEmpty()
+    df = spark.createDataFrame([(w,) for w in ["kiwi", "date", "lime"]], "s string")
+    out = with_global_row_number(df, ["s"])
+    assert {r["s"]: r["row_id"] for r in out.collect()} == {"date": 0, "kiwi": 1, "lime": 2}
+    assert "InMemoryRelation" not in out._jdf.queryExecution().withCachedData().toString()
+    if was_empty:  # other tests of the session may hold caches of their own
+        assert cache_manager.isEmpty()
+
+
 def test_get_table_reapplies_headers(spark):
     """S10 — reconstruction re-labels the pivot with the STORED headers
     (reference data_handler.py:679-685); empty headers fall back to
@@ -105,6 +119,15 @@ def test_sql_view_surface(spark):
     assert [(r["row_id"], r["header"]) for r in rows] == [(0, "name"), (2, "name")]
     sql_keys = spark.sql("SELECT count(*) AS n FROM tv_row_keys").collect()[0]["n"]
     assert sql_keys == idx.row_keys.count() == 3
+    # the optional members are views when present, and only then
+    assert "tv_col_flags" in views and "tv_token_stats" not in views
+    stats_idx = build_index(
+        spark, {"t": df}, {"t": spec}, with_token_stats=True, hot_token_threshold=2
+    )
+    views = register_index_views(spark, stats_idx, prefix="tvs")
+    assert {"tvs_col_flags", "tvs_token_stats"} <= set(views)
+    hot = spark.sql("SELECT tokenized, cnt FROM tvs_token_stats").collect()
+    assert [(r["tokenized"], r["cnt"]) for r in hot] == [("alpha", 2)]
 
 
 @pytest.mark.parametrize("fn", [xash, bloom128], ids=["xash", "bloom128"])

@@ -16,7 +16,7 @@ from datalake_indexes_spark.sources.folder_ingest import (
     HEADER_ROW_ID,
     build_index_from_folder,
     csv_cells_raw,
-    parquet_cells_raw,
+    typed_glob_cells,
 )
 
 
@@ -171,8 +171,8 @@ def test_parquet_glob_group(spark, tmp_path):
             (r, 1): f"n{i}_{r}" for r in range(i + 2)
         }
 
-    parsed = parquet_cells_raw(
-        spark, str(folder / "*.parquet"), cols=["k", "name"], order_by=["k"]
+    parsed = typed_glob_cells(
+        spark, str(folder / "*.parquet"), "parquet", cols=["k", "name"], order_by=["k"]
     ).withColumn("fname", F.element_at(F.split("path", "/"), -1))
     got: dict[str, dict] = {}
     hdrs: dict[str, dict] = {}

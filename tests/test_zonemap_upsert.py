@@ -250,3 +250,48 @@ class TestDiffVersions:
         # same cell COUNT but different content: fingerprint catches it
         assert diff[2].change == "modified"
         assert diff[2].cells_from == diff[2].cells_to == 1
+
+
+@pytest.mark.spark
+class TestMergeWithoutOptionalMembers:
+    """A layout saved without ``token_stats`` and ``col_flags``: the merge
+    skips both, for a delta and for a delete alike."""
+
+    def _saved(self, spark, path):
+        base = _mini_index(
+            spark, [(1, 0, 0, "a"), (2, 0, 0, "b"), (3, 0, 0, "c")], [1, 2, 3]
+        )
+        base.save(path)
+        assert not os.path.exists(os.path.join(path, "token_stats"))
+        assert not os.path.exists(os.path.join(path, "col_flags"))
+
+    def test_upsert(self, spark, tmp_path):
+        from datalake_indexes_spark.index.lake_index import LakeIndex
+
+        path = str(tmp_path / "bare_up")
+        self._saved(spark, path)
+        delta = _mini_index(spark, [(2, 0, 0, "b2"), (2, 0, 1, "b3"), (7, 0, 0, "z")], [2, 7])
+        assert sorted(delta.upsert_into(path)) == [2, 7]
+        idx = LakeIndex.load(spark, path)
+        assert idx.token_stats is None and idx.col_flags is None
+        assert sorted((r.table_id, r.tokenized) for r in idx.cells.collect()) == [
+            (1, "a"), (2, "b2"), (2, "b3"), (3, "c"), (7, "z"),
+        ]
+        assert sorted(r.table_id for r in idx.table_info.collect()) == [1, 2, 3, 7]
+        assert sorted(r.table_id for r in idx.column_headers.collect()) == [1, 2, 3, 7]
+        assert idx.row_keys.count() == 5
+
+    def test_delete(self, spark, tmp_path):
+        from datalake_indexes_spark.index.lake_index import LakeIndex
+
+        path = str(tmp_path / "bare_del")
+        self._saved(spark, path)
+        LakeIndex.delete_tables(spark, path, [1, 3])
+        idx = LakeIndex.load(spark, path)
+        assert idx.token_stats is None and idx.col_flags is None
+        assert [(r.table_id, r.tokenized) for r in idx.cells.collect()] == [(2, "b")]
+        assert [r.table_id for r in idx.table_info.collect()] == [2]
+        assert [r.table_id for r in idx.column_headers.collect()] == [2]
+        assert [r.table_id for r in idx.row_keys.collect()] == [2]
+        for member in ("cells", "row_keys"):
+            assert not os.path.exists(os.path.join(path, member, "table_id=1"))
