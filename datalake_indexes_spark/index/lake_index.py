@@ -79,6 +79,12 @@ class LakeIndex:
     # frames a builder persisted on the way to the members (folder ingest,
     # the testdata index); not a field — released by uncache()
     _staging_frames = ()
+    # query-independent results memoized per instance (not fields): MATE's
+    # hot-token list ((threshold, cap), tokens) and the duplicate-table
+    # relation edges (operators/duplicates.py get_relations, a
+    # driver-built frame)
+    _hot_tokens = None
+    _relations = None
 
     # the persisted members, in write order — the one list every writer,
     # loader, cache and view iterates.  The first two are the row members
@@ -185,12 +191,17 @@ class LakeIndex:
             )
 
     def _write_members(self, root: str, mode: str = "overwrite") -> None:
+        """Write every member that is set; an overwrite also removes an
+        optional member this index lacks, so ``load`` cannot pick up one
+        left by an earlier save to ``root``."""
         with self._shared_held():
             self._write_row_members(root, mode)
-            for name in self._MEMBERS:
-                df = getattr(self, name)
-                if name not in self._ROW_MEMBERS and df is not None:
-                    df.write.mode(mode).parquet(os.path.join(root, name))
+            for name in self._MEMBERS[len(self._ROW_MEMBERS):]:
+                df, mpath = getattr(self, name), os.path.join(root, name)
+                if df is not None:
+                    df.write.mode(mode).parquet(mpath)
+                elif mode == "overwrite":
+                    shutil.rmtree(mpath, ignore_errors=True)
 
     def save(self, path: str, mode: str = "overwrite") -> None:
         """Materialize the index (S7/S8 — replaces COPY + B-tree builds).
@@ -217,7 +228,9 @@ class LakeIndex:
           per query and shuffling kilobytes.
         - ``row_keys`` bucketed by ``(table_id, row_id)`` for the row
           verification join, same reasoning.
-        - every other member that is set: one plain catalog table each.
+        - every other member that is set: one plain catalog table each;
+          the table of a member this index lacks is dropped, so
+          :meth:`load_bucketed` cannot open one left by an earlier save.
 
         ``bucketBy`` requires the table catalog (``saveAsTable``) — plain
         path writes cannot carry bucket metadata; pass ``path`` to pin the
@@ -228,9 +241,9 @@ class LakeIndex:
         with self._shared_held():
             for name in self._MEMBERS:
                 df = getattr(self, name)
+                spark.sql(f"DROP TABLE IF EXISTS {table_prefix}_{name}")
                 if df is None:
                     continue
-                spark.sql(f"DROP TABLE IF EXISTS {table_prefix}_{name}")
                 writer = df.write.mode("overwrite").format("parquet")
                 if name in bucket_cols:
                     cols = bucket_cols[name]

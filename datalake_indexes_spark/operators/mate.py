@@ -105,6 +105,18 @@ class MateResult:
     top_k: DataFrame          # score long, table_id int, column_combination string
     join_pairs: DataFrame     # table_id, column_combination, ext_row_id, input_row_id
     stats: dict = field(default_factory=dict)
+    # the frames join_search persisted for top_k and join_pairs to share,
+    # in persist order; released by release()
+    persisted: tuple = field(default=(), repr=False)
+
+    def release(self) -> None:
+        """Unpersist what :meth:`MATE.join_search` persisted.  Call it once
+        nothing will evaluate ``top_k`` or ``join_pairs`` again, or once
+        their results are materialized elsewhere (a checkpoint, collected
+        rows): later evaluations recompute from the lineage.  Dependents
+        go first, so no released cache is re-planned over another."""
+        for df in reversed(self.persisted):
+            df.unpersist()
 
 
 class MATE:
@@ -145,7 +157,7 @@ class MATE:
                 .collect()
             )
             return [r["tokenized"] for r in rows]
-        cached = getattr(self.index, "_hot_tokens", None)
+        cached = self.index._hot_tokens
         if cached is None or cached[0] != (threshold, cap):
             rows = token_stats_for(self.index.cells, threshold, cap).collect()
             cached = ((threshold, cap), [r["tokenized"] for r in rows])
@@ -260,14 +272,13 @@ class MATE:
         # lineitem probe runs 6.3-7.2s broadcast vs 8.6s+ salted.
         inp = inp.persist()
         small_input = inp.count() <= broadcast_threshold
-        if small_input:
-            inp = F.broadcast(inp)
-
         hot_tokens = [] if small_input else self._lake_hot_tokens(hot_token_threshold)
-        matches, pairs = self._match(
-            inp, [], degree, use_hash_optimization and degree > 1, small_input,
+        matches, pairs, hits = self._match(
+            F.broadcast(inp) if small_input else inp, [], degree,
+            use_hash_optimization and degree > 1, small_input,
             k_c, min_join_ratio, hot_tokens, n_salt,
         )
+        persisted = [inp, hits]
         top_k = self._best_per_table(matches, [], k)
 
         # 7. join maps (mate.py:473-486): ext_row -> input_row for the best
@@ -283,28 +294,34 @@ class MATE:
             .agg(F.max("mate_row_id").alias("input_row_id"))
         )
 
-        result = MateResult(top_k=top_k, join_pairs=join_pairs)
         if stats is not None:
             # the stats counts force the verification join; persist it (and
             # the prefilter output) so the top_k/join_pairs actions that
             # follow reuse the materialization instead of re-executing the
             # join up to 3x — cache matching is by logical plan, so the
             # already-built downstream plans pick the cache up as
-            # InMemoryTableScan.  Left persisted for the result's lifetime
-            # (MEMORY_AND_DISK, evicted under pressure).
-            pairs = pairs.persist()
+            # InMemoryTableScan.  Held until release() (MEMORY_AND_DISK,
+            # evicted under pressure).
+            if degree > 1:
+                pairs = pairs.persist()
+                persisted.append(pairs)
             matches = matches.persist()
+            persisted.append(matches)
             n_match = matches.count()
             # approved = candidate pairs surviving the hash prefilter
             # (mate.py:527-535; the verification semi-filter above drops
-            # never-matching pairs from `verified`, so count `pairs`)
-            n_approved = pairs.count()
+            # never-matching pairs from `verified`, so count `pairs`).  At
+            # degree 1 every pair verifies (see _match), so the two
+            # frames hold the same rows and one count serves both
+            n_approved = pairs.count() if degree > 1 else n_match
             stats["total_approved"] = n_approved
             stats["matching_rows"] = n_match
             stats["total_fp"] = n_approved - n_match
             stats["precision"] = n_match / max(n_approved, 1)
-            result.stats = stats
-        return result
+        return MateResult(
+            top_k=top_k, join_pairs=join_pairs, stats=stats if stats is not None else {},
+            persisted=tuple(persisted),
+        )
 
     # ------------------------------------------------------------------
     @staticmethod
@@ -336,14 +353,16 @@ class MATE:
         min_join_ratio: int,
         hot_tokens: Sequence[str] = (),
         n_salt: int = 16,
-    ) -> tuple[DataFrame, DataFrame]:
+    ) -> tuple[DataFrame, DataFrame, DataFrame]:
         """Steps 2-5 for the prepared (and, when ``small_input``, broadcast)
-        input ``inp``: ``(matches, pairs)`` — the verified pairs with their
-        ``column_combination``, and the candidate pairs that reached
-        verification.  ``keys`` are input columns that split it into
-        independent queries (``[]`` for one query); every grouping and join
-        key below is prefixed with them, so each query keeps its own
-        candidate cap and verification."""
+        input ``inp``: ``(matches, pairs, hits)`` — the verified pairs with
+        their ``column_combination``, the candidate pairs that reached
+        verification, and the probe hits this persisted for the candidate
+        cap and the pair set to share (the caller releases them).
+        ``keys`` are input columns that split it into independent queries
+        (``[]`` for one query); every grouping and join key below is
+        prefixed with them, so each query keeps its own candidate cap and
+        verification."""
         cells = self.index.cells
 
         # 2. posting fetch on first query column (mate.py:251-256).  With
@@ -416,6 +435,7 @@ class MATE:
             # 3. candidate cap: top k_c tables by hit count
             #    (mate.py:313-314)
             table_hits = hits.groupBy(*keys, F.col("table_id").alias("__t")).count()
+        held = hits
         # min_join_ratio drops small posting lists (mate.py:325-326)
         if min_join_ratio > 0:
             table_hits = table_hits.filter(F.col("count") >= min_join_ratio)
@@ -440,7 +460,7 @@ class MATE:
             # __m0 is non-empty by construction (it contains hit_col_id),
             # so every pair verifies — same as the generic degree-1 path
             matches = pairs.withColumn("column_combination", combo).drop("__m0")
-            return matches, pairs.drop("__m0")
+            return matches, pairs.drop("__m0"), held
 
         # 4. super-key containment prefilter (mate.py:390-394); degree 1
         # skips it — see step 2
@@ -520,7 +540,7 @@ class MATE:
             ],
         )
         matches = verified.filter(F.col("__match")).withColumn("column_combination", combo)
-        return matches, pairs
+        return matches, pairs, held
 
     def _best_per_table(self, matches: DataFrame, keys: list[str], k: int) -> DataFrame:
         """6. scoring: count per (table, combination) (mate.py:457-470);
@@ -595,7 +615,7 @@ class MATE:
             prepared = p if prepared is None else prepared.unionByName(p)
 
         keys = ["__query_id"]
-        matches, _ = self._match(
+        matches, _, _ = self._match(
             F.broadcast(prepared), keys, degree, prefilter,
             small_input=True, k_c=k_c, min_join_ratio=0,
         )

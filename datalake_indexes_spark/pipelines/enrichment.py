@@ -4,9 +4,25 @@ MATE joinability search → drop duplicate lake tables → COCOA correlation
 ranking → materialize the winning external columns onto the input → (optional)
 model fit showing the RMSE effect.
 
-One composed lazy plan per phase; the only driver-side values are the A12
-stats counters (phase runtimes + result sizes, mirroring the run report the
-demo prints, demo:267-281, 489-500).
+One composed lazy plan per phase.  What is pinned or held on the driver,
+and why (each saves work that every later consumer would otherwise redo):
+
+- the numbered input, when numbered here (no ``mate_row_id`` column): one
+  eager local checkpoint, read by MATE's input prep, COCOA's target ranks
+  and the final left join — lazy, each re-ran the numbering windows;
+- the MATE top-k after duplicate removal (≤ ``k`` rows) and the COCOA
+  correlations (≤ ``k_features`` rows): collected once and held as
+  driver-built frames (:func:`..session.local_copy`), so no consumer
+  re-embeds the MATE or COCOA plan and the winners come from the same
+  rows;
+- the surviving join maps: a local checkpoint, materialized by the
+  correlations collect; MATE's persisted intermediates are released
+  right after it (:meth:`..operators.mate.MateResult.release`);
+- the duplicate-table relations: computed once per index
+  (:meth:`..operators.duplicates.DuplicateDetection.get_relations`).
+
+The A12 stats counters (phase runtimes + result sizes) mirror the run
+report the demo prints (demo:267-281, 489-500).
 """
 
 from __future__ import annotations
@@ -21,7 +37,8 @@ from datalake_indexes_spark.index.builder import with_global_row_number
 from datalake_indexes_spark.index.lake_index import LakeIndex
 from datalake_indexes_spark.operators.cocoa import COCOA
 from datalake_indexes_spark.operators.duplicates import DuplicateDetection
-from datalake_indexes_spark.operators.mate import MATE
+from datalake_indexes_spark.operators.mate import MATE, MateResult
+from datalake_indexes_spark.session import local_copy
 
 
 @dataclass
@@ -54,7 +71,12 @@ def enrich_dataset(
         # catalog-vouched dense keys skip the numbering window entirely
         inp_ids = input_df
     else:
-        inp_ids = with_global_row_number(input_df, list(order), out_col="mate_row_id")
+        # pinned once: MATE's input prep, COCOA's target ranks and the
+        # final left join all read the numbered input, and lazy each of
+        # them re-ran the numbering windows
+        inp_ids = with_global_row_number(
+            input_df, list(order), out_col="mate_row_id"
+        ).localCheckpoint()
 
     t0 = time.time()
     mate = MATE(index)
@@ -72,37 +94,40 @@ def enrich_dataset(
     if remove_duplicates:
         relations = DuplicateDetection(index).get_relations()
         top_k = DuplicateDetection.remove_duplicate_tables(top_k, relations)
-    # localCheckpoint truncates the lineage at this k-row frame: every
-    # downstream consumer (the COCOA exclude set, the join-map semi-filter,
-    # the materialization pivot) otherwise re-embeds the ENTIRE MATE
-    # probe/verify plan once per reference, and the composed correlations
-    # plan grows multiplicatively — big enough that building its
-    # plan-description string OOMed an 8 GB driver heap (the round-9 red
-    # test).  eager=False: the count() below materializes it.
-    top_k = top_k.localCheckpoint(eager=False)
-    stats["joinable_tables"] = top_k.count()
+    # ≤ k rows, held on the driver: every downstream consumer (the COCOA
+    # exclude set, the join-map filter, the caller) reads the rows instead
+    # of re-embedding the ENTIRE MATE probe/verify plan once per
+    # reference — a plan that grows multiplicatively and whose
+    # plan-description string once OOMed an 8 GB driver heap
+    top_rows, top_k = local_copy(top_k)
+    stats["joinable_tables"] = len(top_rows)
     stats["mate_runtime"] = round(time.time() - t0, 3)
 
     t0 = time.time()
     cocoa = COCOA(index)
-    # checkpointed (it persists like the old .persist(), plus lineage
-    # truncation): the join maps feed BOTH the correlation job and the
+    # checkpointed: the join maps feed BOTH the correlation job and the
     # materialization pivot — without the blocks each action re-executes
-    # the entire MATE probe/verify pipeline upstream of the pairs, and
-    # without the truncation each reference re-embeds that plan (see the
-    # top_k comment above)
+    # the MATE pipeline upstream of the pairs, and without the truncation
+    # each reference re-embeds that plan (see top_k above).  The
+    # correlations collect materializes it; after that nothing reads
+    # MATE's persisted frames, so they are released.  A semi-join, not
+    # isin(ids): generated code inlines integer literals, so an id list
+    # would compile new classes for every distinct top-k
     surviving_pairs = mate_res.join_pairs.join(
         F.broadcast(top_k.select("table_id")), "table_id", "leftsemi"
     ).localCheckpoint(eager=False)
-    pruned_res = type(mate_res)(top_k=top_k, join_pairs=surviving_pairs)
     correlations = cocoa.enrich_multicolumn(
-        inp_ids, pruned_res, k_c=k_features, target_column=target_column
-    ).persist()
-    stats["evaluated_features"] = correlations.count()
+        inp_ids, MateResult(top_k=top_k, join_pairs=surviving_pairs),
+        k_c=k_features, target_column=target_column,
+    )
+    # ≤ k_features rows: the result and the winner list are the same rows
+    corr_rows, correlations = local_copy(correlations)
+    mate_res.release()
+    stats["evaluated_features"] = len(corr_rows)
     stats["correlation_runtime"] = round(time.time() - t0, 3)
 
     t0 = time.time()
-    winners = [r["table_col_id"] for r in correlations.collect()]
+    winners = [r["table_col_id"] for r in corr_rows]
     feats = (
         index.cells.withColumn(
             "table_col_id", F.concat_ws("_", "table_id", "col_id")

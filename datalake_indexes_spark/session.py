@@ -3,6 +3,8 @@
 Defaults are tuned for correctness-at-scale first:
 - AQE on (runtime re-planning, skew-join handling, shuffle coalescing),
 - Arrow on (all our Python crossings are pandas UDFs),
+- a compiled-code cache large enough to hold a whole enrichment's
+  whole-stage-codegen classes across calls,
 - shuffle partitions sized by env (tests use small values; a real cluster
   would set this to ~2-3x total cores).
 """
@@ -96,6 +98,16 @@ def get_spark(
             "spark.sql.maxPlanStringLength",
             os.environ.get("SPARK_MAX_PLAN_STRING_LENGTH", "8388608"),
         )
+        # Compiled codegen classes are cached per JVM in an LRU of
+        # spark.sql.codegen.cache.maxEntries entries (default 100).  One
+        # enrich_dataset call needs 120-300 distinct classes, so at 100
+        # the LRU evicted them within the same call and every warm enrich
+        # operation compiled 317-353 classes again (perfbench lake, seed
+        # 5, scripts/op_counts.py, plans/r15/).  At 2000 the first
+        # operation compiles 270, the second 72-80 and later ones 3-42: only
+        # the classes of an input shape not seen before.  A static conf:
+        # it takes effect only when set before the session's JVM starts.
+        .config("spark.sql.codegen.cache.maxEntries", "2000")
         # env override so profiling runs can read stage metrics over the
         # UI REST API; off by default (bench/tests unchanged)
         .config("spark.ui.enabled", os.environ.get("SPARK_UI_ENABLED", "false"))
@@ -122,3 +134,13 @@ def local_frame(spark: SparkSession, rows: list[tuple], schema: str) -> DataFram
     return spark.range(1, numPartitions=1).select(
         F.inline(F.from_json(F.lit(payload), f"array<struct<{schema}>>"))
     )
+
+
+def local_copy(df: DataFrame) -> tuple[list, DataFrame]:
+    """``df``'s rows, collected once, and a :func:`local_frame` holding
+    them with ``df``'s column names, types and row order: the frame reads
+    the rows instead of re-running ``df``'s plan.  For results known to
+    be small (a top-k, a ranking, metadata)."""
+    rows = df.collect()
+    schema = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in df.schema)
+    return rows, local_frame(df.sparkSession, [tuple(r) for r in rows], schema)
